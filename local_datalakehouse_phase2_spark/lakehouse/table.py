@@ -25,6 +25,7 @@ JVM Hadoop FileSystem API, exercised in tests/test_fileio.py.
 from __future__ import annotations
 
 import bisect as _bisect
+import copy
 import datetime as _dt
 import math
 import os
@@ -51,22 +52,56 @@ from ..localrows import local_df
 # round-trip into the JVM parser; lifecycle entries resolve the SAME
 # table DDL dozens of times per run (profiled: 249 parses / ~0.34 s of
 # py4j wait in one lakehouse_catalog_branch pass). The parse is a pure
-# function of the DDL text and parsed schemas are treated as immutable
-# everywhere in this package, so a process-wide memo is safe across
-# sessions. Bounded so a pathological many-schema workload cannot grow
-# it without limit.
-_DDL_PARSE_CACHE: dict[str, T.StructType] = {}
+# function of the DDL text, so a process-wide memo is safe across
+# sessions. Callers get a deep copy (pure Python, no py4j): a
+# StructType is mutable (`add`, field renames), and a caller editing
+# the shared instance would change every later parse of the same DDL.
+# Bounded so a pathological many-schema workload cannot grow it
+# without limit.
+_DDL_PARSE_CACHE: dict[str, T.DataType] = {}
 _DDL_PARSE_CACHE_MAX = 512
 
 
-def _parse_ddl_cached(ddl: str) -> T.StructType:
+def _parse_ddl_cached(ddl: str) -> T.DataType:
     st = _DDL_PARSE_CACHE.get(ddl)
     if st is None:
         st = T._parse_datatype_string(ddl)
         if len(_DDL_PARSE_CACHE) >= _DDL_PARSE_CACHE_MAX:
             _DDL_PARSE_CACHE.pop(next(iter(_DDL_PARSE_CACHE)))
         _DDL_PARSE_CACHE[ddl] = st
-    return st
+    return copy.deepcopy(st)
+
+
+def _is_local_relation(plan) -> bool:
+    """True for a LocalRelation logical plan: rows the driver already
+    holds, so collecting them runs no Spark job
+    (LocalTableScanExec.executeCollect)."""
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+# key types whose Python equality on collected values is Spark's
+# grouping equality (floats differ on NaN and -0.0; binaries and
+# nested values collect unhashable)
+_DRIVER_KEY_TYPES = (
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.BooleanType,
+    T.StringType,
+    T.DecimalType,
+    T.DateType,
+    T.TimestampType,
+    T.TimestampNTZType,
+)
+
+
+def _driver_rows(df: DataFrame) -> list | None:
+    """`df`'s rows when its optimized plan is a LocalRelation (every
+    `local_df` product), collected without a job; else None."""
+    if not _is_local_relation(df._jdf.queryExecution().optimizedPlan()):
+        return None
+    return df.collect()
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # Iceberg default; guide :234
 
@@ -600,12 +635,7 @@ class LakehouseTable:
                 ddf = self._apply_eq_deletes(ddf, data_state, eq_by_data, schema)
             parts.append(ddf.select(*out_cols))
         out = _reduce(DataFrame.unionByName, parts)
-        if (
-            not tagged
-            and not dirty
-            and "://" not in self.table_dir
-            and type(self.io) is LocalFileIO
-        ):
+        if not tagged and not dirty and self._plain_local():
             # exact-count tag (r16): a clean snapshot read's row count
             # is the sum of its files' footer-recorded counts — the
             # quantity Iceberg answers COUNT(*) from manifests with.
@@ -1922,15 +1952,13 @@ class LakehouseTable:
         # survivors are a subset of the affected files' rows, so the
         # logged byte total is a sound (upper-bound) size estimate:
         # skip the measure-then-shape staging write entirely
-        input_bytes = self._logged_bytes(affected, ref=ref)
-        if ref is None and self._live_rows_small(cap=_LOCAL_VALUES_MAX):
+        if ref is None and self._logged_rows(affected) <= _LOCAL_VALUES_MAX:
             survivors = self._localize_commit_frame(survivors)
-            input_bytes = None  # the LocalRelation fast path self-sizes
         return self._commit_write(
             survivors,
             operation="delete",
             removed=tuple(affected),
-            input_bytes=input_bytes,
+            input_bytes=self._logged_bytes(affected, ref=ref),
             deletes_fingerprint=fingerprint,
             branch=ref,
             extra=extra,
@@ -1986,29 +2014,36 @@ class LakehouseTable:
         )
         return tuple(sorted(p for p, fi in state.items() if fi.content != 0))
 
-    def _live_rows_small(self, cap: int | None = None) -> bool:
-        """True when the table's live DATA row count — known exactly
-        from the log's per-file metadata, no job — is within `cap`
-        (default: the driver-side fast-write cap) and the warehouse is
-        plain-local. Any row-level op's matched/survivor set is bounded
-        by this, so it gates collect-then-pyarrow fast paths soundly:
-        a 100 TB table never qualifies, a lifecycle-demo table always
-        does."""
-        if "://" in self.table_dir or type(self.io) is not LocalFileIO:
-            return False
-        total = sum(
-            fi.row_count for fi in self.log.state_at().values() if fi.content == 0
-        )
-        return total <= (fastwrite.MAX_ROWS if cap is None else cap)
+    def _plain_local(self) -> bool:
+        """True when the warehouse is a plain local directory behind
+        `LocalFileIO`. The driver-side pyarrow writers bypass
+        `self.io`, so a remote URI or a custom FileIO wrapping local
+        paths (arbitration, fault injection) keeps the Spark writers,
+        whose interposition then sees every byte."""
+        return "://" not in self.table_dir and type(self.io) is LocalFileIO
+
+    def _collect_at_most(self, df: DataFrame, cap: int) -> list | None:
+        """`df`'s rows when it has at most `cap` of them and the
+        warehouse is plain-local, else None. One bounded scan
+        (`limit(cap + 1)`), so what a row-level op matches — not the
+        table's size — picks its collect-then-pyarrow path; a match
+        over `cap` costs this probe on top of the distributed path."""
+        if not self._plain_local():
+            return None
+        rows = df.limit(cap + 1).collect()
+        return rows if len(rows) <= cap else None
 
     def _localize_commit_frame(self, df: DataFrame) -> DataFrame:
-        """Collect a lifecycle-scale commit frame (caller gated by
-        `_live_rows_small`) and rebuild it as a pure-JVM LocalRelation
-        so the following `_write_files` takes the pyarrow fast path:
-        one collect job replaces the Spark write job plus the
-        committer's temp-dir rename dance. If the collected set still
-        exceeds localrows' VALUES cap (e.g. a big MERGE source), the
-        original frame is returned and the Spark writer keeps it."""
+        """Collect a lifecycle-scale commit frame (callers gate on the
+        logged row counts of the files it is read from, plus a MERGE's
+        source rows) and rebuild it as a pure-JVM LocalRelation so the
+        following `_write_files` takes the pyarrow fast path: one
+        collect job replaces the Spark write job plus the committer's
+        temp-dir rename dance. If the collected set still exceeds
+        localrows' VALUES cap, the original frame is returned and the
+        Spark writer keeps it."""
+        if not self._plain_local():
+            return df
         rows = df.collect()
         if len(rows) > _LOCAL_VALUES_MAX:
             return df
@@ -2018,12 +2053,13 @@ class LakehouseTable:
         self, rows
     ) -> tuple[tuple[FileInfo, ...], list[str]]:
         """Driver-side variant of `_write_pos_deletes` for collected
-        (file_path, pos) rows (caller gated by `_live_rows_small`):
-        python-sorts them — same (file_path, pos) order contract, the
-        footer bounds reads use to scope the anti-join — and writes ONE
-        pyarrow file, skipping the global-sort shuffle, the committer
-        rename dance, and the referenced-files re-read job (the
-        distinct file_paths come straight from the rows in hand)."""
+        (file_path, pos) rows (callers bound them with
+        `_collect_at_most`): python-sorts them — same (file_path, pos)
+        order contract, the footer bounds reads use to scope the
+        anti-join — and writes ONE pyarrow file, skipping the
+        global-sort shuffle, the committer rename dance, and the
+        referenced-files re-read job (the distinct file_paths come
+        straight from the rows in hand)."""
         rows = sorted(tuple(r) for r in rows)
         if not rows:
             return (), []
@@ -2133,12 +2169,11 @@ class LakehouseTable:
         matches = tagged.filter(cond).select(
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
-        if self._live_rows_small():
-            # lifecycle-scale table: ONE job (the matched scan) instead
-            # of sort-shuffle + write + referenced re-read
-            delete_files, referenced = self._write_pos_deletes_rows(
-                matches.collect()
-            )
+        held = self._collect_at_most(matches, fastwrite.MAX_ROWS)
+        if held is not None:
+            # few matched rows: the bounded matched scan replaces the
+            # sort-shuffle + write + referenced re-read
+            delete_files, referenced = self._write_pos_deletes_rows(held)
         else:
             delete_files, referenced = self._write_pos_deletes(matches)
         if not delete_files:  # nothing matched: no commit
@@ -2263,15 +2298,13 @@ class LakehouseTable:
             else:
                 exprs.append(F.col(f.name))
         rewritten = self._read_rel(affected, ref=ref).select(*exprs)
-        input_bytes = self._logged_bytes(affected, ref=ref)
-        if ref is None and self._live_rows_small(cap=_LOCAL_VALUES_MAX):
+        if ref is None and self._logged_rows(affected) <= _LOCAL_VALUES_MAX:
             rewritten = self._localize_commit_frame(rewritten)
-            input_bytes = None
         return self._commit_write(
             rewritten,
             operation="update",
             removed=tuple(affected),
-            input_bytes=input_bytes,
+            input_bytes=self._logged_bytes(affected, ref=ref),
             deletes_fingerprint=fingerprint,
             branch=ref,
             extra=extra,
@@ -2289,14 +2322,14 @@ class LakehouseTable:
         src = matched
         # cap at the VALUES limit: the updated rows re-enter via
         # local_df, which only stays a pure-JVM LocalRelation that far
-        if self._live_rows_small(cap=_LOCAL_VALUES_MAX):
-            # lifecycle-scale table: collect the matched rows ONCE —
-            # tombstones come straight from their (__file, __pos), and
-            # the updated versions re-enter as a LocalRelation so the
-            # data write takes the pyarrow fast path too. One job
-            # total instead of tombstone-sort + tombstone-write +
-            # referenced re-read + data write.
-            mrows = matched.collect()
+        mrows = self._collect_at_most(matched, _LOCAL_VALUES_MAX)
+        if mrows is not None:
+            # few matched rows: collect them ONCE — tombstones come
+            # straight from their (__file, __pos), and the updated
+            # versions re-enter as a LocalRelation so the data write
+            # takes the pyarrow fast path too. The bounded scan
+            # replaces tombstone-sort + tombstone-write + referenced
+            # re-read + data write.
             delete_files, referenced = self._write_pos_deletes_rows(
                 [(r["__file"], r["__pos"]) for r in mrows]
             )
@@ -2321,13 +2354,9 @@ class LakehouseTable:
             else:
                 exprs.append(F.col(f.name))
         try:
-            # updated rows are bounded by the referenced files' bytes;
-            # the LocalRelation fast path measures its own bytes
+            # updated rows are bounded by the referenced files' bytes
             data_files = self._write_files(
-                src.select(*exprs),
-                input_bytes=(
-                    None if src is not matched else self._logged_bytes(referenced)
-                ),
+                src.select(*exprs), input_bytes=self._logged_bytes(referenced)
             )
         except BaseException:
             for fi in delete_files:  # tombstones already staged
@@ -2348,6 +2377,12 @@ class LakehouseTable:
             self.log.state_at_branch(ref) if ref is not None else self.log.state_at()
         )
         return sum(state[p].size_bytes for p in rel_paths if p in state)
+
+    def _logged_rows(self, rel_paths) -> int:
+        """Row count of live main-lineage files, from the log — no job.
+        It bounds a copy-on-write rewrite of those files."""
+        state = self.log.state_at()
+        return sum(state[p].row_count for p in rel_paths if p in state)
 
     def merge(
         self,
@@ -2391,8 +2426,9 @@ class LakehouseTable:
         )
         if not state:
             return self.append(source, extra=extra, ref=ref)
+        source_rows = self._source_rows(source)
         if mode == "merge-on-read":
-            return self._mor_merge(source, key_cols, extra)
+            return self._mor_merge(source, key_cols, extra, source_rows)
         fingerprint = self._deletes_fingerprint(ref=ref)
         keys = source.select(*key_cols).distinct()
         tagged = self._tagged_read(ref=ref)
@@ -2408,26 +2444,27 @@ class LakehouseTable:
             new_data = carried.unionByName(source)
         else:
             new_data = source
-        input_bytes = self._merge_input_bytes(affected, source)
-        if ref is None and self._live_rows_small(cap=_LOCAL_VALUES_MAX):
-            # carried rows are metadata-bounded by the gate; the MERGE
-            # source may still be big — _localize_commit_frame hands
-            # the frame back to the Spark writer in that case
-            localized = self._localize_commit_frame(new_data)
-            if localized is not new_data:
-                new_data, input_bytes = localized, None
+        if (
+            ref is None
+            and self._logged_rows(affected) + source_rows <= _LOCAL_VALUES_MAX
+        ):
+            new_data = self._localize_commit_frame(new_data)
         return self._commit_write(
             new_data,
             operation="merge",
             removed=tuple(affected),
-            input_bytes=input_bytes,
+            input_bytes=self._merge_input_bytes(affected, source_rows),
             extra=extra,
             deletes_fingerprint=fingerprint,
             branch=ref,
         )
 
     def _mor_merge(
-        self, source: DataFrame, key_cols: list[str], extra: dict | None
+        self,
+        source: DataFrame,
+        key_cols: list[str],
+        extra: dict | None,
+        source_rows: int,
     ) -> LogEntry:
         """Merge-on-read MERGE: tombstone every target row whose key
         appears in source, append the full source — one atomic commit.
@@ -2439,16 +2476,20 @@ class LakehouseTable:
             raise ValueError(f"MERGE source is missing table columns {missing}")
         keys = source.select(*key_cols).distinct()
         tagged = self._tagged_read()
-        matched = tagged.join(F.broadcast(keys), key_cols, "left_semi")
-        delete_files, referenced = self._write_pos_deletes(
-            matched.select(F.col("__file").alias("file_path"), F.col("__pos").alias("pos"))
+        matches = tagged.join(F.broadcast(keys), key_cols, "left_semi").select(
+            F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
+        held = self._collect_at_most(matches, fastwrite.MAX_ROWS)
+        if held is not None:
+            delete_files, referenced = self._write_pos_deletes_rows(held)
+        else:
+            delete_files, referenced = self._write_pos_deletes(matches)
         aligned = source.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
         try:
             data_files = self._write_files(
-                aligned, input_bytes=self._merge_input_bytes([], source)
+                aligned, input_bytes=self._merge_input_bytes([], source_rows)
             )
         except BaseException:
             for fi in delete_files:
@@ -2473,7 +2514,17 @@ class LakehouseTable:
         simply insert), so the check is two stages: one tiny agg on the
         (small, upsert-side) source, and only if duplicates exist, a
         key-pruned target scan to see whether any duplicate actually
-        matches."""
+        matches. A driver-held source whose keys compare in Python as
+        in Spark (no floats, binaries or nested types) is checked for
+        duplicates on the driver, with no job."""
+        held = _driver_rows(source)
+        types = {f.name: f.dataType for f in source.schema.fields}
+        if (
+            held is not None
+            and all(isinstance(types.get(k), _DRIVER_KEY_TYPES) for k in key_cols)
+            and len({tuple(r[k] for k in key_cols) for r in held}) == len(held)
+        ):
+            return  # driver-held source without duplicate keys
         dups = (
             source.groupBy(*key_cols).count().filter(F.col("count") > 1).drop("count")
         )
@@ -2496,17 +2547,24 @@ class LakehouseTable:
                 "cardinality rule)"
             )
 
-    def _merge_input_bytes(self, affected: list[str], source: DataFrame) -> int:
+    @staticmethod
+    def _source_rows(source: DataFrame) -> int:
+        """Row count of a MERGE source: from the rows in hand when the
+        driver holds them, else one tiny count job on the (small,
+        upsert-side) source."""
+        held = _driver_rows(source)
+        return len(held) if held is not None else source.count()
+
+    def _merge_input_bytes(self, affected: list[str], source_rows: int) -> int:
         """Output-size estimate for a merge-shaped commit: carried rows
         are bounded by the affected files' logged bytes; the source
-        contributes ~rows x the table's logged bytes/row. One tiny count
-        job on the (small, upsert-side) source replaces a full staged
-        measurement write."""
+        contributes ~rows x the table's logged bytes/row. A row count
+        of the source replaces a full staged measurement write."""
         state = self.log.state_at()
         all_files = [fi for fi in state.values() if fi.content == 0]
         total_rows = sum(fi.row_count for fi in all_files)
         bpr = sum(fi.size_bytes for fi in all_files) / max(1, total_rows)
-        return self._logged_bytes(affected) + int(source.count() * bpr) + 1
+        return self._logged_bytes(affected) + int(source_rows * bpr) + 1
 
     def merge_when(
         self,
@@ -2641,7 +2699,7 @@ class LakehouseTable:
             new_data,
             operation="merge",
             removed=tuple(affected),
-            input_bytes=self._merge_input_bytes(affected, source),
+            input_bytes=self._merge_input_bytes(affected, self._source_rows(source)),
             extra=extra,
             deletes_fingerprint=fingerprint,
         )
@@ -2766,6 +2824,12 @@ class LakehouseTable:
         ceil(total/target). Catalyst's plan-size estimate is useless for
         this (literal/unknown plans report 8 EiB). Compaction passes
         exact logged bytes and skips staging entirely.
+
+        A LocalRelation-backed frame first tries the driver-side
+        pyarrow path (`_write_files_local`), whether or not
+        `input_bytes` is given: `input_bytes` only sizes the Spark
+        writer, and the fast path declines by itself when a file would
+        exceed the target size.
         """
         props = self.log.properties_at()
         target = int(props.get(PROP_TARGET_FILE_SIZE, DEFAULT_TARGET_FILE_SIZE))
@@ -2774,7 +2838,6 @@ class LakehouseTable:
 
         if (
             not shaped
-            and input_bytes is None
             and mode == "none"
             and not props.get(PROP_SORT_ORDER, "")
             and not props.get(PROP_PARTITION_SPEC)
@@ -2914,11 +2977,7 @@ class LakehouseTable:
         observable empty-frame behavior exactly — one empty
         schema-bearing parquet file — so the files metadata view is
         indistinguishable."""
-        if "://" in self.table_dir or type(self.io) is not LocalFileIO:
-            # the direct os/pyarrow writes below bypass self.io; a
-            # custom FileIO wrapping plain local paths (arbitration,
-            # fault injection) must keep the Spark-writer path so its
-            # interposition still sees every byte
+        if not self._plain_local():
             return None
         part_cols: list[str] | None = None
         n_parts = 0
@@ -2933,7 +2992,7 @@ class LakehouseTable:
                 # the multi-file write needs no job either. Only plain
                 # column keys are claimed; computed keys fall back.
                 child = plan.child()
-                if child.getClass().getSimpleName() != "LocalRelation":
+                if not _is_local_relation(child):
                     return None
                 if not plan.optNumPartitions().isDefined():
                     # repartition(cols) WITHOUT an explicit n: AQE may
@@ -2956,7 +3015,7 @@ class LakehouseTable:
                     self.spark._jsparkSession, child
                 )
                 df = DataFrame(jdf, self.spark)
-            elif cls != "LocalRelation":
+            elif not _is_local_relation(plan):
                 return None
         except Exception:
             return None

@@ -14,7 +14,11 @@ Exactness: every literal renders round-trippable (repr for floats,
 microsecond timestamps, hex for binary), and each column is CAST to
 its declared type, so results are value-identical to the
 createDataFrame spelling — the oracle hash gate re-proved that for
-every registry entry when this swapped in.
+every registry entry when this swapped in. Nullability is exact too:
+nullable fields come out nullable and declared non-null fields (every
+lakehouse metadata view's schema) stay non-null, so those frames stay
+on the VALUES path; only a None in a non-null field falls back, to the
+createDataFrame error it raises.
 
 At 100 TB this matters for none of the data path (real data never
 routes through literal rows) but keeps the *metadata* path — the thing
@@ -41,6 +45,26 @@ _MAX_ROWS = 500
 # delete-all survivors) and the spark.sql parse is a py4j round trip
 # each time otherwise.
 _EMPTY_MEMO: dict = {}
+
+# non-null placeholder per type for the empty frame's dummy row (the
+# row is filtered out; it only fixes each column's nullability)
+_PLACEHOLDER = {
+    T.BooleanType: False,
+    T.ByteType: 0,
+    T.ShortType: 0,
+    T.IntegerType: 0,
+    T.LongType: 0,
+    T.FloatType: 0.0,
+    T.DoubleType: 0.0,
+    T.DecimalType: 0,
+    T.StringType: "",
+    T.BinaryType: b"",
+    T.DateType: _dt.date(1970, 1, 1),
+    T.TimestampType: _dt.datetime(1970, 1, 1),
+    T.TimestampNTZType: _dt.datetime(1970, 1, 1),
+    T.ArrayType: (),
+    T.MapType: {},
+}
 
 __all__ = ["local_df"]
 
@@ -108,6 +132,22 @@ def _lit(v, dt: T.DataType) -> str:
     raise _Unrenderable(dt)  # structs etc. -> fallback
 
 
+def _casts(sch: T.StructType) -> str:
+    """The SELECT list that types VALUES columns col1..colN as `sch`.
+    A nullable field is wrapped in IF(true, x, NULL), which marks it
+    nullable at analysis time (an all-literal VALUES column would
+    otherwise come out non-nullable); the optimizer folds the IF away
+    before execution. A non-null field gets a bare CAST, so it stays
+    non-null exactly when every rendered value is non-null — a None
+    there leaves the output nullable, and the caller's schema check
+    falls back to createDataFrame, which raises on it."""
+    return ", ".join(
+        f"CAST({f'IF(true, col{i}, NULL)' if f.nullable else f'col{i}'} "
+        f"AS {f.dataType.simpleString()}) AS `{f.name}`"
+        for i, f in enumerate(sch.fields, 1)
+    )
+
+
 def local_df(
     spark: SparkSession, rows, schema: T.StructType | str
 ) -> DataFrame:
@@ -122,7 +162,6 @@ def local_df(
     rows = list(rows)
     if len(rows) > _MAX_ROWS:
         return spark.createDataFrame(rows, sch)
-    names = [f"`{f.name}`" for f in sch.fields]
     types = [f.dataType for f in sch.fields]
     if not rows:
         # empty frame as a LocalRelation too (r16): `createDataFrame([],
@@ -136,12 +175,19 @@ def local_df(
         memo = _EMPTY_MEMO.get(key)
         if memo is not None:
             return memo
-        casts = ", ".join(
-            f"CAST(IF(true, col{i + 1}, NULL) AS {t.simpleString()}) AS {n}"
-            for i, (n, t) in enumerate(zip(names, types))
+        try:
+            # non-null fields need a non-null dummy to stay non-null
+            dummy = ", ".join(
+                _lit(_PLACEHOLDER[type(f.dataType)], f.dataType)
+                if not f.nullable
+                else "NULL"
+                for f in sch.fields
+            )
+        except (KeyError, _Unrenderable):
+            return spark.createDataFrame(rows, sch)
+        out = spark.sql(
+            f"SELECT {_casts(sch)} FROM VALUES ({dummy}) WHERE false"
         )
-        dummy = "(" + ", ".join("NULL" for _ in types) + ")"
-        out = spark.sql(f"SELECT {casts} FROM VALUES {dummy} WHERE false")
         if out.schema != sch:
             return spark.createDataFrame(rows, sch)
         while len(_EMPTY_MEMO) >= 256:
@@ -163,15 +209,7 @@ def local_df(
             )
     except _Unrenderable:
         return spark.createDataFrame(rows, sch)
-    # IF(true, x, NULL) marks every column nullable at analysis time —
-    # matching createDataFrame's schema exactly (an all-literal VALUES
-    # column would otherwise come out non-nullable); the optimizer
-    # folds the IF away before execution
-    casts = ", ".join(
-        f"CAST(IF(true, col{i + 1}, NULL) AS {t.simpleString()}) AS {n}"
-        for i, (n, t) in enumerate(zip(names, types))
-    )
-    out = spark.sql(f"SELECT {casts} FROM VALUES {', '.join(rendered)}")
-    if out.schema != sch:  # declared non-null fields etc. — stay exact
+    out = spark.sql(f"SELECT {_casts(sch)} FROM VALUES {', '.join(rendered)}")
+    if out.schema != sch:  # a None in a non-null field etc. — stay exact
         return spark.createDataFrame(rows, sch)
     return out

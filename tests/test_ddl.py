@@ -106,3 +106,21 @@ def test_catalog_identifier_guards(spark, tmp_path):
         lake.table("ns.typo")
     # the failed lookup left no phantom table behind
     assert lake.tables("ns") == ["real"]
+
+
+def test_parsed_ddl_schema_is_a_private_copy(spark):
+    """The DDL parse memo hands every caller its own StructType: a
+    caller mutating the returned schema must not change the next
+    parse of the same DDL."""
+    from pyspark.sql import types as T
+
+    from local_datalakehouse_phase2_spark.lakehouse.table import _parse_ddl_cached
+
+    ddl = "k bigint, v string"
+    first = _parse_ddl_cached(ddl)
+    first.add("extra", T.IntegerType())
+    first.fields[0].name = "renamed"
+    again = _parse_ddl_cached(ddl)
+    assert again.simpleString() == "struct<k:bigint,v:string>"
+    assert again is not _parse_ddl_cached(ddl)
+    assert _parse_ddl_cached("bigint") == T.LongType()  # bare types too

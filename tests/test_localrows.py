@@ -17,10 +17,16 @@ def _same(spark, rows, schema):
     a = local_df(spark, rows, schema)
     b = spark.createDataFrame(rows, schema)
     assert a.schema == b.schema, (a.schema, b.schema)
-    ra = sorted(map(str, a.collect()))
-    rb = sorted(map(str, b.collect()))
+    # both spellings keep input order; Row equality compares map
+    # values as dicts, whose key order the JVM does not preserve
+    ra, rb = a.collect(), b.collect()
     assert ra == rb, (ra, rb)
     return a
+
+
+def _local_scan(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
 
 
 def test_scalars_roundtrip(spark):
@@ -32,9 +38,7 @@ def test_scalars_roundtrip(spark):
     df = _same(spark, rows, "k bigint, s string, d double, b boolean, n bigint")
     # and it really is the JVM path: a LocalTableScan (few JVM tasks,
     # no Python runner), not a 32-partition pickled-rows parallelize
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan, plan
-    assert "Scan ExistingRDD" not in plan, plan
+    assert _local_scan(df), df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_float_exactness(spark):
@@ -101,3 +105,55 @@ def test_decimal(spark):
 
     rows = [(Decimal("123.45"),), (None,)]
     _same(spark, rows, "d decimal(10,2)")
+
+
+def test_non_null_schemas_stay_local(spark):
+    # the lakehouse metadata views declare non-null fields; they must
+    # keep the exact schema AND stay on the VALUES path, empty or not
+    from local_datalakehouse_phase2_spark.lakehouse.table import (
+        FILES_SCHEMA,
+        SNAPSHOTS_SCHEMA,
+    )
+
+    snaps = [
+        (1, dt.datetime(2026, 8, 15, 12, 30, 45, 123456), "append", 1, 0, 1, 20),
+        (2, dt.datetime(2026, 8, 15, 12, 31), "delete", 1, 0, 2, 20),
+    ]
+    files = [
+        (0, "/w/t/data/v1/part-0.parquet", 1234, 20,
+         {"k": ["1", "20", "0"], "s": [None, None, "20"]}, {"k_bucket": "3"}),
+        (1, "/w/t/data/v2/part-0.parquet", 88, 2, {}, None),
+        (0, "/w/t/data/v3/part-0.parquet", 77, 0, None, None),  # null maps
+    ]
+    for rows, schema in (
+        (snaps, SNAPSHOTS_SCHEMA),
+        (files, FILES_SCHEMA),
+        ([], SNAPSHOTS_SCHEMA),
+        ([], FILES_SCHEMA),
+    ):
+        df = _same(spark, rows, schema)
+        assert _local_scan(df), (rows, df._jdf.queryExecution().executedPlan())
+
+
+def test_none_in_non_null_field_raises_like_create_dataframe(spark):
+    schema = T.StructType([T.StructField("k", T.LongType(), False)])
+    rows = [(1,), (None,)]
+    with pytest.raises(Exception) as want:
+        spark.createDataFrame(rows, schema)
+    with pytest.raises(type(want.value)) as got:
+        local_df(spark, rows, schema)
+    assert str(got.value) == str(want.value)
+
+
+def test_metadata_views_run_zero_jobs(spark, tmp_path, spark_jobs):
+    from local_datalakehouse_phase2_spark.lakehouse import Lakehouse
+
+    lake = Lakehouse(spark, str(tmp_path / "w"))
+    lake.create_namespace("lab")
+    t = lake.create_table("lab.views", schema="k bigint, v string")
+    t.append(local_df(spark, [(i, f"v{i}") for i in range(5)], "k bigint, v string"))
+    t.append(local_df(spark, [(9, None)], "k bigint, v string"))
+    for view, n_rows in ((t.snapshots, 3), (t.files, 2)):
+        rows, jobs = spark_jobs(lambda: view().collect())
+        assert len(rows) == n_rows
+        assert jobs == 0, f"{view.__name__}() ran {jobs} Spark job(s)"
