@@ -16,6 +16,12 @@ zero steal time, idle load — host-level contention invisible to the
 guest), so a single pass measures the neighbor's workload as much as
 this engine. The JSON carries `runs`, `timing`, and the legacy
 single-pass total as `value_first_pass` so rounds remain comparable.
+
+Next to each query's per-pass walls (`samples`) it records two exact
+per-pass counters: `jobs`, the Spark jobs the query started, and
+`codegen_compiles`, the classes Spark's code generator compiled for it.
+A warm pass compiles almost nothing, so a thrashing generated-class
+cache or a new per-query job shows up here without a profiler.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ import os
 import statistics
 import time
 
+from local_datalakehouse_phase2_spark.obs import codegen_compiles, next_job_id
 from local_datalakehouse_phase2_spark.registry import all_specs
 from local_datalakehouse_phase2_spark.session import get_spark
 
@@ -123,12 +130,17 @@ def main() -> None:
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     extra_names = [n for n in EXTRA if n in specs]
     samples: dict[str, list[float]] = {n: [] for n in names + extra_names}
+    jobs: dict[str, list[int]] = {n: [] for n in samples}
+    compiles: dict[str, list[int]] = {n: [] for n in samples}
     for _ in range(runs):
         for name in names + extra_names:
+            j0, c0 = next_job_id(spark), codegen_compiles(spark)
             t0 = time.perf_counter()
             df = specs[name].fn(spark, sf_dir)
             df.count()
             samples[name].append(time.perf_counter() - t0)
+            jobs[name].append(next_job_id(spark) - j0)
+            compiles[name].append(codegen_compiles(spark) - c0)
 
     med = {n: round(statistics.median(ts), 4) for n, ts in samples.items()}
     timings = {n: med[n] for n in names}
@@ -167,6 +179,8 @@ def main() -> None:
                     n: [round(t, 4) for t in ts]
                     for n, ts in samples.items()
                 },
+                "jobs": jobs,
+                "codegen_compiles": compiles,
                 "loadavg_before": load_before,
                 "loadavg_after": loadavg(),
                 "cpus": os.cpu_count(),

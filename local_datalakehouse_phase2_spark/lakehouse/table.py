@@ -47,6 +47,7 @@ from .log import CommitConflictError, FileInfo, LogEntry, TransactionLog
 from .partition import PROP_PARTITION_SPEC, PROP_PARTITION_SPEC_HISTORY
 from ..localrows import _MAX_ROWS as _LOCAL_VALUES_MAX
 from ..localrows import local_df
+from ..sources.loaders import read_parquet
 
 # DDL-string -> parsed StructType. `_parse_datatype_string` is a py4j
 # round-trip into the JVM parser; lifecycle entries resolve the SAME
@@ -1338,8 +1339,8 @@ class LakehouseTable:
         for entry in self.log.entries():
             for fi in entry.added_files:
                 if fi.content == 0:
-                    return self.spark.read.parquet(
-                        os.path.join(self.table_dir, fi.path)
+                    return read_parquet(
+                        self.spark, os.path.join(self.table_dir, fi.path)
                     ).schema
         return T.StructType([])
 
@@ -2960,7 +2961,11 @@ class LakehouseTable:
         n_split = math.ceil(total / target)
         if n_split <= len(staged):
             return staged  # every file is at/under the cap (modulo skew)
-        reshaped = shape(self.spark.read.parquet(staged_dir), n_split)
+        # the files hold exactly `df`'s columns: passing its schema
+        # skips the footer-inference job a bare read would run
+        reshaped = shape(
+            self.spark.read.schema(df.schema).parquet(staged_dir), n_split
+        )
         final = scan(write_dir(reshaped))
         self.io.rmtree(staged_dir)
         return final

@@ -33,6 +33,13 @@ def get_spark(
       100 TB the static shuffle-partition number is always wrong, so
       let AQE re-plan from runtime statistics.
     - Arrow enabled for any pandas-UDF path.
+    - Generated-class cache (`spark.sql.codegen.cache.maxEntries`, a
+      static conf) at 1024 entries instead of 100. One pass of the 22
+      benchmark queries needs 439 distinct whole-stage and projection
+      classes; it walks them in order, so at 100 the LRU evicts each
+      class before its reuse and a warm pass recompiles about 450 of
+      them (Janino compile, class define and re-JIT every time). 1024
+      is more than twice that working set.
     """
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
@@ -51,6 +58,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # plan-inspection fidelity: the explain renderer truncates
         # ReadSchema/metadata strings at this length (default 100), and
         # a truncated ReadSchema makes column-pruning assertions pass

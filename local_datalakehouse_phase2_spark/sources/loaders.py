@@ -9,8 +9,13 @@ only configuration changes at cluster scale (SURVEY.md S8).
 
 from __future__ import annotations
 
+import copy
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -26,6 +31,60 @@ TABLES: tuple[str, ...] = (
 )
 
 
+# Session confs that change how a parquet footer maps to Spark types: an
+# inferred schema is only reusable while all of them are unchanged.
+_FOOTER_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_MAX_SCHEMAS = 1024
+# (realpath, inode, mtime_ns, size, *footer confs) -> the schema Spark
+# inferred for that file. Content-keyed, so one memo serves every session.
+_schemas: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers a local file's schema once.
+
+    Spark infers a parquet schema by running a one-task job that reads
+    the footer, on every read. For a local regular file the inferred
+    schema is memoized under the file's identity (realpath, inode,
+    mtime, size) plus the current values of `_FOOTER_CONFS`, and later
+    reads pass it to `spark.read.schema(...)`: no job, and the same
+    analyzed plan, since file sources make the schema nullable either
+    way. Rewriting the file or changing one of those confs misses the
+    memo and infers again. Any other path (a directory, a remote URI)
+    is inferred on every read, as before.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        *(spark.conf.get(k) for k in _FOOTER_CONFS),
+    )
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    # Two threads missing on the same key both infer and store the same
+    # schema: a wasted job, never a wrong one.
+    df = spark.read.parquet(path)
+    if len(_schemas) >= _MAX_SCHEMAS:
+        _schemas.pop(next(iter(_schemas)))
+    # a copy: `df.schema` is the frame's own object, which callers may
+    # mutate (`StructType.add` works in place)
+    _schemas[key] = copy.deepcopy(df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan => Catalyst gets predicate
     pushdown, column pruning, and row-group skipping for free.
@@ -38,6 +97,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a native timestamp read is just cast. Either way the column lands
     as TIMESTAMP_NTZ to match the naive-timestamp semantics of the
     other fixture tables and of DuckDB.
+
+    The read goes through `read_parquet`, so only the first read of a
+    fixture file runs Spark's footer-inference job. Later reads reuse
+    the inferred schema while the file's realpath, inode, mtime and
+    size and the footer-mapping session confs (`nanosAsLong`, set just
+    below for `events`, `binaryAsString`, `int96AsTimestamp`,
+    `inferTimestampNTZ.enabled`) are unchanged.
     """
     if name == "events":
         # The conf is runtime-settable, so set it here rather than relying
@@ -45,7 +111,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # harness, notebook) that didn't go through session.py can still
         # read a NANOS column. Harmless for MICROS files.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql.types import LongType
 

@@ -4,6 +4,8 @@ import os
 
 import pytest
 
+from local_datalakehouse_phase2_spark.obs import codegen_compiles as compiles
+from local_datalakehouse_phase2_spark.obs import next_job_id
 from local_datalakehouse_phase2_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -38,20 +40,29 @@ def spark_jobs(spark):
     status tracker's per-group list fills in from the listener bus."""
     sc = spark.sparkContext
 
-    def next_job_id() -> int:
-        # py4j auto-converts the AtomicInteger on some Spark builds and
-        # hands back the raw Java object on others
-        nid = sc._jsc.sc().dagScheduler().nextJobId()
-        return nid.get() if hasattr(nid, "get") else int(nid)
-
     def run(fn):
-        before = next_job_id()
+        before = next_job_id(spark)
         sc.setJobGroup("job-count-gate", "jobs started by one engine call")
         try:
             out = fn()
         finally:
             sc.setJobGroup(None, None)
-        return out, next_job_id() - before
+        return out, next_job_id(spark) - before
+
+    return run
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """`run(fn)` returns `(fn's result, number of classes Spark's code
+    generator compiled during the call)`. Classes served from the
+    generated-class cache are not compiled, so a re-run of a plan the
+    session has seen counts 0 unless the cache evicted its classes."""
+
+    def run(fn):
+        before = compiles(spark)
+        out = fn()
+        return out, compiles(spark) - before
 
     return run
 
