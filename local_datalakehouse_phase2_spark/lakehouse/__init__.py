@@ -5,7 +5,6 @@ from .catalog import CatalogError, Lakehouse
 from .catalog_refs import CatalogRefError, CatalogRefs
 from .fs import (
     ArbitratedFileIO,
-    EndpointMutex,
     FileIO,
     FlockMutex,
     HadoopFileIO,
@@ -36,7 +35,6 @@ from .table import LakehouseTable
 __all__ = [
     "ArbitratedFileIO",
     "FlockMutex",
-    "EndpointMutex",
     "CatalogError",
     "CatalogRefError",
     "CatalogRefs",

@@ -1,13 +1,14 @@
 """casd — a tiny HTTP conditional-put lock endpoint (r15, VERDICT item 5).
 
-The third conformance-kit backend: where `EndpointMutex` stands in for
-the DynamoDB/Nessie arbiter role with a shared sqlite FILE (reference
-stack: docker-compose.yml delegates commit arbitration to the Nessie
-service; spark-defaults.conf pins its catalog), this one is genuinely
-remote-SHAPED — cooperating writers share NOTHING but a TCP endpoint.
-No filesystem medium, no shared kernel object: the wire protocol is
-the only coupling, which is exactly the deployment shape of a real
-DynamoDB table / etcd cluster / Nessie server.
+The remote lease backend of the conformance kit (`HttpCasMutex` is
+its client), beside `FlockMutex` for host scope. It plays the
+DynamoDB/Nessie arbiter role (reference stack: docker-compose.yml
+delegates commit arbitration to the Nessie service;
+spark-defaults.conf pins its catalog) in its real shape: cooperating
+writers share NOTHING but a TCP endpoint. No filesystem medium, no
+shared kernel object: the wire protocol is the only coupling, which is
+exactly the deployment shape of a real DynamoDB table / etcd cluster /
+Nessie server.
 
 Protocol (JSON over HTTP; every mutation is atomic under one server
 lock — the role DynamoDB's conditional expression or etcd's txn plays):

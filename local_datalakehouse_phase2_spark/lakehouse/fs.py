@@ -431,9 +431,9 @@ class LocalFileIO(FileIO):
 #   4. CRASH LIVENESS — a holder that dies without releasing must not
 #      wedge the path forever. Kernel-mediated backends (flock) get
 #      this from automatic release; lease-based backends (endpoint
-#      conditional-put: sqlite stand-in, DynamoDB, etcd) must steal
-#      holder records older than log.LOCK_STEAL_SECONDS, and a LIVE
-#      holder younger than that must never be stolen.
+#      conditional-put: the casd HTTP endpoint, DynamoDB, etcd) must
+#      steal holder records older than log.LOCK_STEAL_SECONDS, and a
+#      LIVE holder younger than that must never be stolen.
 #   5. NON-REENTRANT — like threading.Lock; ArbitratedFileIO never
 #      nests acquisitions of one path.
 #
@@ -465,6 +465,16 @@ class LocalFileIO(FileIO):
 # treat LockStolenError as "my commit may not have survived — re-plan".
 
 
+def _canon(path: str) -> str:
+    """The key every arbiter uses for `path`: two processes spelling the
+    same file differently (symlinked mount, relative vs absolute,
+    trailing slash) must land on the SAME key, or the mutex silently
+    grants no exclusion (clause 1). realpath resolves symlinks and
+    normalizes; scheme-qualified paths (no real file) fall back to
+    normpath of the raw string."""
+    return os.path.realpath(path) if "://" not in path else os.path.normpath(path)
+
+
 class FlockMutex:
     """`flock(2)`-based cross-process arbiter for `ArbitratedFileIO`.
 
@@ -478,9 +488,9 @@ class FlockMutex:
     on one node, the common single-node lakehouse deployment this repo
     targets (SURVEY.md §4). It is explicitly NOT a multi-host answer:
     flock over NFS/FUSE-S3 is advisory-at-best, so a fleet of drivers
-    needs the DynamoDB/ZooKeeper/catalog-endpoint mutex (the Nessie
-    role in the reference stack, docker-compose.yml:6) behind this
-    same one-argument seam.
+    needs a catalog-endpoint mutex (HttpCasMutex; the Nessie role in
+    the reference stack, docker-compose.yml:6) behind this same
+    one-argument seam.
 
     Lock files are never deleted (unlink-while-locked is the classic
     flock ABA bug: a waiter blocked on the unlinked inode acquires a
@@ -501,14 +511,7 @@ class FlockMutex:
     def __call__(self, path: str):
         import fcntl
 
-        # canonicalize before hashing: two processes spelling the same
-        # file differently (symlinked mount, relative vs absolute,
-        # trailing slash) must land on the SAME lock file or the mutex
-        # silently grants no exclusion. realpath resolves symlinks and
-        # normalizes; scheme-qualified paths (no real file) fall back
-        # to normpath of the raw string.
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        name = hashlib.sha1(canon.encode("utf-8")).hexdigest() + ".lock"
+        name = hashlib.sha1(_canon(path).encode("utf-8")).hexdigest() + ".lock"
 
         fd = os.open(os.path.join(self.lock_dir, name), os.O_CREAT | os.O_RDWR, 0o644)
         try:
@@ -519,196 +522,6 @@ class FlockMutex:
                 fcntl.flock(fd, fcntl.LOCK_UN)
         finally:
             os.close(fd)
-
-
-class EndpointMutex:
-    """Single-ENDPOINT conditional-put arbiter for `ArbitratedFileIO` —
-    the multi-host backend FlockMutex explicitly is not.
-
-    Acquire = one atomic conditional INSERT of the lock row keyed by
-    the canonical path into a shared sqlite database (`BEGIN
-    IMMEDIATE` + insert-if-absent, exactly DynamoDB's
-    `attribute_not_exists(path)` PutItem, the pattern Iceberg's S3
-    lock manager used and the arbitration role the reference stack
-    delegates to its Nessie service, docker-compose.yml:6). Two
-    "nodes" that share NO filesystem lock directory — only the
-    endpoint — serialize here: the database's own locking makes the
-    read-check-insert one atomic step, so at most one caller holds a
-    path at a time. Release = delete the row.
-
-    A holder row older than `log.LOCK_STEAL_SECONDS` is presumed
-    crashed and stolen (same presumption as the ref/merge lock files;
-    a real DynamoDB deployment uses a TTL attribute the same way).
-
-    sqlite is the stand-in endpoint so the backend is testable in this
-    container; the acquire/release shape is column-for-column what a
-    DynamoDB table or an etcd lease needs, and it proves the seam's
-    claim: swapping multi-host arbitration in changes ZERO consumer
-    code — commits, ref locks, and txn markers still route through the
-    one `create_exclusive` method. Not reentrant, like FlockMutex.
-
-    FENCING (r16, parity with HttpCasMutex): every successful acquire
-    (insert or steal) bumps a per-path monotone fence row; the yielded
-    handle's `validate()` — which ArbitratedFileIO calls right before
-    each protected write — checks the fence is still newest inside ONE
-    `BEGIN IMMEDIATE` transaction (the DynamoDB condition-expression
-    role) and renews the lease on success; release verifies the fence
-    and raises `LockStolenError` as the backstop when a thief acquired
-    mid-hold.
-    """
-
-    def __init__(self, db_path: str, timeout_s: float = 30.0):
-        self.db_path = db_path
-        self.timeout_s = timeout_s
-
-    def _connect(self):
-        import sqlite3
-
-        con = sqlite3.connect(self.db_path, timeout=self.timeout_s, isolation_level=None)
-        con.execute("PRAGMA busy_timeout = %d" % int(self.timeout_s * 1000))
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS locks ("
-            " path TEXT PRIMARY KEY, owner TEXT, acquired_at REAL)"
-        )
-        # per-path monotone fence counter: never reset, bumped on every
-        # successful acquire including steals (Lamport's fencing rule)
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS lock_fences ("
-            " path TEXT PRIMARY KEY, fence INTEGER)"
-        )
-        return con
-
-    class _SqlFenceHandle:
-        __slots__ = ("_con", "_path", "_owner", "fence")
-
-        def __init__(self, con, path: str, owner: str, fence: int):
-            self._con = con
-            self._path = path
-            self._owner = owner
-            self.fence = fence
-
-        def validate(self) -> None:
-            con = self._con
-            con.execute("BEGIN IMMEDIATE")
-            try:
-                cur = con.execute(
-                    "SELECT fence FROM lock_fences WHERE path = ?", (self._path,)
-                ).fetchone()
-                row = con.execute(
-                    "SELECT owner FROM locks WHERE path = ?", (self._path,)
-                ).fetchone()
-                ok = (
-                    cur is not None
-                    and cur[0] == self.fence
-                    and row is not None
-                    and row[0] == self._owner
-                )
-                if ok:
-                    # lease renewal: a holder that just proved it still
-                    # owns the newest fence is live by definition
-                    con.execute(
-                        "UPDATE locks SET acquired_at = ? WHERE path = ? AND owner = ?",
-                        (time.time(), self._path, self._owner),
-                    )
-            finally:
-                con.execute("COMMIT")
-            if not ok:
-                raise StaleFenceError(
-                    f"fence {self.fence} on {self._path!r} is stale (endpoint now "
-                    f"at {cur[0] if cur else None}): a thief acquired mid-hold — "
-                    "the protected write was REJECTED before it was issued"
-                )
-
-    @contextmanager
-    def __call__(self, path: str):
-        import sqlite3
-
-        from . import log as _log
-
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        owner = f"{os.getpid()}-{threading.get_ident()}"
-        con = self._connect()
-        try:
-            deadline = time.monotonic() + self.timeout_s
-            fence = None
-            while True:
-                try:
-                    con.execute("BEGIN IMMEDIATE")
-                    row = con.execute(
-                        "SELECT owner, acquired_at FROM locks WHERE path = ?",
-                        (canon,),
-                    ).fetchone()
-                    now = time.time()
-                    if row is None or now - row[1] > _log.LOCK_STEAL_SECONDS:
-                        # insert, or steal a crashed holder's row —
-                        # either way the fence advances atomically with
-                        # the ownership change
-                        con.execute(
-                            "INSERT INTO lock_fences VALUES (?, 1)"
-                            " ON CONFLICT(path) DO UPDATE SET fence = fence + 1",
-                            (canon,),
-                        )
-                        fence = con.execute(
-                            "SELECT fence FROM lock_fences WHERE path = ?",
-                            (canon,),
-                        ).fetchone()[0]
-                        if row is None:
-                            con.execute(
-                                "INSERT INTO locks VALUES (?, ?, ?)",
-                                (canon, owner, now),
-                            )
-                        else:
-                            con.execute(
-                                "UPDATE locks SET owner = ?, acquired_at = ?"
-                                " WHERE path = ? AND owner = ?",
-                                (owner, now, canon, row[0]),
-                            )
-                        con.execute("COMMIT")
-                        break
-                    con.execute("COMMIT")
-                except sqlite3.OperationalError:
-                    try:
-                        con.execute("ROLLBACK")
-                    except sqlite3.OperationalError:
-                        pass
-                if time.monotonic() >= deadline:
-                    raise RuntimeError(
-                        f"timed out waiting for endpoint lock on {canon!r}"
-                    )
-                time.sleep(0.005)
-            body_exc: BaseException | None = None
-            try:
-                yield self._SqlFenceHandle(con, canon, owner, fence)
-            except BaseException as e:
-                body_exc = e
-                raise
-            finally:
-                con.execute("BEGIN IMMEDIATE")
-                try:
-                    con.execute(
-                        "DELETE FROM locks WHERE path = ? AND owner = ?",
-                        (canon, owner),
-                    )
-                    cur = con.execute(
-                        "SELECT fence FROM lock_fences WHERE path = ?", (canon,)
-                    ).fetchone()
-                finally:
-                    con.execute("COMMIT")
-                # backstop, same rule as HttpCasMutex: skip when the
-                # body already reported the steal at write time
-                if (
-                    cur is not None
-                    and cur[0] > fence
-                    and not isinstance(body_exc, LockStolenError)
-                ):
-                    raise LockStolenError(
-                        f"lock on {canon!r} was stolen mid-hold (fence {fence} -> "
-                        f"{cur[0]}): this writer stalled past LOCK_STEAL_SECONDS "
-                        "and its protected operation may have overlapped the "
-                        "thief's — treat the outcome as unknown and re-plan"
-                    )
-        finally:
-            con.close()
 
 
 class LockStolenError(RuntimeError):
@@ -762,8 +575,8 @@ class _FenceHandle:
 
 class HttpCasMutex:
     """HTTP conditional-put arbiter for `ArbitratedFileIO` — the
-    genuinely remote-SHAPED lease backend (r15, conformance kit's
-    third entry): cooperating writers share NOTHING but a TCP endpoint
+    genuinely remote-SHAPED lease backend (r15, the conformance kit's
+    lease entry): cooperating writers share NOTHING but a TCP endpoint
     (`casd.py`, run standalone), the deployment shape of a real
     DynamoDB table / etcd cluster / Nessie server (the reference
     stack's commit arbiter, docker-compose.yml:6,
@@ -805,7 +618,7 @@ class HttpCasMutex:
     def __call__(self, path: str):
         from . import log as _log
 
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
+        canon = _canon(path)
         owner = f"{socket.gethostname()}-{os.getpid()}-{threading.get_ident()}"
         deadline = time.monotonic() + self.timeout_s
         while True:
@@ -898,8 +711,7 @@ class FencedLocalFileIO(LocalFileIO):
         os.makedirs(fence_dir, exist_ok=True)
 
     def _sidecar(self, path: str) -> str:
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        name = hashlib.sha1(canon.encode("utf-8")).hexdigest() + ".fence"
+        name = hashlib.sha1(_canon(path).encode("utf-8")).hexdigest() + ".fence"
         return os.path.join(self.fence_dir, name)
 
     def create_exclusive_fenced(self, path: str, data: str, fence: int) -> bool:
@@ -953,24 +765,19 @@ class ArbitratedFileIO(FileIO):
 
     FENCE-CHECKED WRITES (r16): when the mutex's context manager
     yields a handle exposing `validate()` (HttpCasMutex does — the
-    endpoint's conditional check), `create_exclusive` calls it under
-    the held lock immediately before the inner write. A holder that
-    stalled past LOCK_STEAL_SECONDS while a thief took the path gets
-    `StaleFenceError` and its write is NEVER ISSUED — the overlap
+    endpoint's conditional check), every arbitrated create calls it
+    under the held lock immediately before the inner write. A holder
+    that stalled past LOCK_STEAL_SECONDS while a thief took the path
+    gets `StaleFenceError` and its write is NEVER ISSUED — the overlap
     release-time LockStolenError only reports is closed at the write.
-    `fence_writes=False` opts out (measurement / compat only; fencing
-    is strictly safer). Backends that yield nothing (FlockMutex,
-    EndpointMutex, the default thread-lock registry) skip the check:
-    their crash-liveness story doesn't admit a same-process stalled
-    holder overlapping (flock: release is tied to process lifetime) or
-    they predate fence issuance (documented clause-4 caveat)."""
+    Backends that yield nothing (FlockMutex, the default thread-lock
+    registry) skip the check: their release is tied to process
+    lifetime, so a live stalled holder is never stolen from."""
 
-    def __init__(self, inner: FileIO, mutex=None, fence_writes: bool = True):
+    def __init__(self, inner: FileIO, mutex=None):
         self._inner = inner
-        self._fence_writes = fence_writes
         if mutex is None:
             import collections
-            import threading
 
             locks: dict[str, threading.Lock] = collections.defaultdict(
                 threading.Lock
@@ -984,19 +791,7 @@ class ArbitratedFileIO(FileIO):
         self._mutex = mutex
 
     def create_exclusive(self, path: str, data: str) -> bool:
-        with self._mutex(path) as handle:
-            validate = getattr(handle, "validate", None)
-            if self._fence_writes and callable(validate):
-                validate()  # StaleFenceError: write rejected, not issued
-            fence = getattr(handle, "fence", None)
-            fenced_put = getattr(self._inner, "create_exclusive_fenced", None)
-            if self._fence_writes and fence is not None and callable(fenced_put):
-                # fencing-capable MEDIUM (FencedLocalFileIO; real-world:
-                # S3 conditional writes, DynamoDB condition expressions):
-                # the token check is atomic with the put, closing even
-                # the validate->write stall residual
-                return fenced_put(path, data, fence)
-            return self._inner.create_exclusive(path, data)
+        return self.create_exclusive_guarded(path, data, lambda: True)
 
     def create_exclusive_guarded(self, path: str, data: str, precondition) -> bool:
         """Run `precondition()` INSIDE the per-path mutex hold, then the
@@ -1010,13 +805,17 @@ class ArbitratedFileIO(FileIO):
         mutex (r17 lost-commit fix)."""
         with self._mutex(path) as handle:
             validate = getattr(handle, "validate", None)
-            if self._fence_writes and callable(validate):
-                validate()
+            if callable(validate):
+                validate()  # StaleFenceError: write rejected, not issued
             if not precondition():
                 return False
             fence = getattr(handle, "fence", None)
             fenced_put = getattr(self._inner, "create_exclusive_fenced", None)
-            if self._fence_writes and fence is not None and callable(fenced_put):
+            if fence is not None and callable(fenced_put):
+                # fencing-capable MEDIUM (FencedLocalFileIO; real-world:
+                # S3 conditional writes, DynamoDB condition expressions):
+                # the token check is atomic with the put, closing even
+                # the validate->write stall residual
                 return fenced_put(path, data, fence)
             return self._inner.create_exclusive(path, data)
 

@@ -10,9 +10,10 @@ functions (JVM-side, codegen'd — no Python UDFs):
 - Jaccard:  exact shingle-set Jaccard computed only on LSH candidates
             (ngram_jaccard_dupes)
 - SimHash:  64/128-bit shingle-hash sign-sum + block-pair banding for
-            Hamming-distance candidates; the registry entries export
-            oracle-recomputable quality summaries over the pair
-            surfaces (simhash_pairs, simhash_wide_pairs)
+            Hamming-distance candidates, keyed in the same fused pass
+            as the MinHash bands (_fused_band_pairs); the registry
+            entries export oracle-recomputable quality summaries over
+            its `hamming` column (simhash_pairs, simhash_wide_pairs)
 
 Scale design (the whole point at 100 TB): near-dup detection is
 shingle -> signature (narrow, linear) -> explode bands (x BANDS) ->
@@ -238,9 +239,7 @@ def band_keys(d: DataFrame) -> DataFrame:
 # variant: 8 blocks of 8 bits keyed on every C(8,2)=28 block PAIR
 # (16-bit keys) — hamming <= 6 flips <= 6 blocks, so >= 2 blocks,
 # hence >= 1 combo, match exactly: recall 1.0, collisions 256x lower
-# than single-block 8-bit keys. Shared between the fused entry pass
-# and `simhash_hamming_pairs` (the brute-force-tested pair surface) so
-# the two can never diverge.
+# than single-block 8-bit keys.
 _SIMHASH64_COMBO_KEYS = [
     f"{cid} * 65536 + ((simhash >> {i * 8}) & 255) * 256"
     f" + ((simhash >> {j * 8}) & 255)"
@@ -262,6 +261,20 @@ _SIMHASH_WIDE_COMBO_KEYS = [
     f"{cid}L * 4294967296L + {_wide_block(i)} * 65536L + {_wide_block(j)}"
     for cid, (i, j) in enumerate((i, j) for i in range(8) for j in range(i + 1, 8))
 ]
+
+# Each width's `_fused_band_pairs` arguments (combo keys, pair Hamming
+# distance, fingerprint columns). The entries, the brute-force tests
+# and tools/count_curves.py all pass these: one pair surface.
+_SIMHASH64 = {
+    "combo_keys": _SIMHASH64_COMBO_KEYS,
+    "ham_sql": "bit_count(a.simhash ^ b.simhash)",
+    "sim_cols": ("simhash",),
+}
+_SIMHASH_WIDE = {
+    "combo_keys": _SIMHASH_WIDE_COMBO_KEYS,
+    "ham_sql": "bit_count(a.s1 ^ b.s1) + bit_count(a.s2 ^ b.s2)",
+    "sim_cols": ("s1", "s2"),
+}
 
 
 def _fused_keyed(
@@ -905,95 +918,19 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = shingle_hash_frame(d).select(
         "doc_id", "hs", _simhash64("hs").alias("simhash")
     )
-    pairs = _fused_band_pairs(
-        base,
-        combo_keys=_SIMHASH64_COMBO_KEYS,
-        ham_sql="bit_count(a.simhash ^ b.simhash)",
-        sim_cols=("simhash",),
-    )
+    pairs = _fused_band_pairs(base, **_SIMHASH64)
     return _flags_summary(pairs, *_floors(sf_dir, _SIMHASH_FLOORS, (0.9, 0.7)))
 
 
-def simhash_hamming_pairs(
-    d: DataFrame,
-    hs: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming): every blocking-candidate pair with its
-    64-bit SimHash Hamming distance — the per-pair surface the entry
-    summarizes (and tests brute-force against).
-
-    Sign-sum per bit over 3-word-shingle features (unigram features
-    collapse on a small shared vocabulary): bit b of simhash = 1 iff
-    the majority of shingle hashes set bit b.
-
-    Implementation choice, measured at sf0.1 (50k docs): a nested
-    array-lambda expression runs interpreted per element (~5 s); an
-    explode + 64 conditional-SUM-aggregate plan is codegen'd but the
-    generated method is so large that compilation alone costs ~9 s on
-    first run. The shape below hashes shingles JVM-side (xxhash64 in
-    the projection) and feeds the hash arrays to one Arrow-batched
-    numpy UDF (unpackbits + reduceat) — plan stays tiny, math stays
-    vectorized, zero Python-level hashing."""
-    if hs is None:
-        hs = shingle_hash_frame(d)
-    sigs = hs.select("doc_id", _simhash64("hs").alias("simhash"))
-    # Multi-block keys (_SIMHASH64_COMBO_KEYS): a single 8-bit block
-    # key has only 256 buckets — at 50k docs that is ~200 docs/bucket
-    # and ~40M all-pairs candidates (measured 35 s at sf0.1); the
-    # 28 block-pair tables keep recall exactly 1.0 at hamming <= 6
-    # while collisions fall 256x. Same one-shuffle bucket-grouping
-    # shape as lsh_candidate_pairs: a band-key self-join would
-    # evaluate the signature UDF twice.
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[F.expr(k) for k in _SIMHASH64_COMBO_KEYS])
-        ).alias("bk"),
-    )
-    buckets = (
-        bands.groupBy("bk")
-        .agg(F.collect_list(F.struct("doc_id", "simhash")).alias("ms"))
-        .filter((F.size("ms") > 1) & (F.size("ms") <= MAX_BUCKET))
-    )
-    return (
-        buckets.select(F.explode("ms").alias("a"), "ms")
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.first("hamming").alias("hamming"))
-    )
-
-
+# The 128-bit fingerprint's second 64-bit half re-hashes each
+# shingle's xxhash64 value under seed 7 (hash-of-hash; avalanche makes
+# the bit planes as independent as a second string hash) instead of
+# re-hashing the shingle STRINGS. The distinction matters at corpus
+# scale: the shingle string pipeline (split -> slice -> concat_ws per
+# shingle) is the most expensive expression in the whole family (the r8
+# measurement), and the string-seeded h2 paid it a second time — at
+# 500k docs the switch plus the hot-bucket prefilter cut the entry ~6x.
 _H2_FROM_HS = "transform(hs, h -> xxhash64(h, 7))"
-
-
-def _simhash_wide_sigs(d: DataFrame) -> DataFrame:
-    """(doc_id, s1, s2): a 128-bit SimHash as two independent 64-bit
-    halves — the second family re-hashes each shingle's xxhash64 value
-    under seed 7 (hash-of-hash; avalanche makes the bit planes as
-    independent as a second string hash) instead of re-hashing the
-    shingle STRINGS. The distinction matters at corpus scale: the
-    shingle string pipeline (split -> slice -> concat_ws per shingle)
-    is the most expensive expression in the whole family (the r8
-    measurement), and the string-seeded h2 paid it a second time —
-    at 500k docs the switch plus the hot-bucket prefilter cut the
-    entry ~6x. Factored out so the recall test brute-forces the same
-    fingerprints."""
-    return (
-        d.filter(_has_shingles())
-        .select("doc_id", _shingle_hashes().alias("hs"))
-        .select(
-            "doc_id",
-            _simhash64("hs").alias("s1"),
-            _simhash64(F.expr(_H2_FROM_HS)).alias("s2"),
-        )
-    )
 
 
 @register(
@@ -1028,7 +965,7 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fused shape (r14, 4.91 -> 2.92 s at sf0.1 interleaved): both
     # 64-bit halves, the MinHash truth bands, and the 32-bit combo
     # keys derive from ONE shingle-hash projection (the second family
-    # is hash-of-hash — see _simhash_wide_sigs), so the expensive
+    # is hash-of-hash — see _H2_FROM_HS), so the expensive
     # shingle-string pipeline runs once for the whole entry — see
     # _fused_band_pairs.
     base = shingle_hash_frame(d).select(
@@ -1037,48 +974,9 @@ def simhash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _simhash64("hs").alias("s1"),
         _simhash64(F.expr(_H2_FROM_HS)).alias("s2"),
     )
-    pairs = _fused_band_pairs(
-        base,
-        combo_keys=_SIMHASH_WIDE_COMBO_KEYS,
-        ham_sql="bit_count(a.s1 ^ b.s1) + bit_count(a.s2 ^ b.s2)",
-        sim_cols=("s1", "s2"),
-    )
+    pairs = _fused_band_pairs(base, **_SIMHASH_WIDE)
     return _flags_summary(
         pairs, *_floors(sf_dir, _SIMHASH_WIDE_FLOORS, (0.6, 0.3))
-    )
-
-
-def simhash_wide_hamming_pairs(d: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, hamming): every 32-bit-combo-key blocking
-    candidate with its 128-bit Hamming distance — the per-pair surface
-    the entry summarizes (and the brute-force recall test checks)."""
-    sigs = _simhash_wide_sigs(d)
-    bands = sigs.select(
-        "doc_id",
-        "s1",
-        "s2",
-        F.explode(
-            F.array(*[F.expr(k) for k in _SIMHASH_WIDE_COMBO_KEYS])
-        ).alias("bk"),
-    )
-    buckets = (
-        bands.groupBy("bk")
-        .agg(F.collect_list(F.struct("doc_id", "s1", "s2")).alias("ms"))
-        .filter((F.size("ms") > 1) & (F.size("ms") <= MAX_BUCKET))
-    )
-    return (
-        buckets.select(F.explode("ms").alias("a"), "ms")
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr(
-                "bit_count(a.s1 ^ b.s1) + bit_count(a.s2 ^ b.s2)"
-            ).alias("hamming"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.first("hamming").alias("hamming"))
     )
 
 

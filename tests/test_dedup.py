@@ -78,15 +78,17 @@ def test_minhash_estimates_track_true_jaccard(spark, sf_small, docs):
 
 def test_simhash_finds_near_identical_docs(spark, sf_small, docs):
     from local_datalakehouse_phase2_spark.operators.dedup import (
-        simhash_hamming_pairs,
+        _SIMHASH64,
+        _fused_band_pairs,
+        _simhash64,
+        shingle_hash_frame,
     )
     from local_datalakehouse_phase2_spark.sources.loaders import parallel_scan
 
-    rows = (
-        simhash_hamming_pairs(parallel_scan(spark, sf_small, "documents"))
-        .filter("hamming <= 6")
-        .collect()
+    base = shingle_hash_frame(parallel_scan(spark, sf_small, "documents")).select(
+        "doc_id", "hs", _simhash64("hs").alias("simhash")
     )
+    rows = _fused_band_pairs(base, **_SIMHASH64).filter("hamming <= 6").collect()
     pairs = {(r.doc_a, r.doc_b) for r in rows}
     # hamming<=6 on 64-bit simhash is a tighter near-dup bar than J>=0.6;
     # every simhash pair should be genuinely similar (J >= 0.3 at least)
@@ -194,20 +196,30 @@ def test_simhash_wide_blocking_recall_is_exact(spark, sf_small):
     block-pair combo keys matches — the Manku argument, verified
     empirically here."""
     import numpy as np
+    from pyspark.sql import functions as F
 
     from local_datalakehouse_phase2_spark.operators.dedup import (
-        _simhash_wide_sigs,
-        simhash_wide_hamming_pairs,
+        _H2_FROM_HS,
+        _SIMHASH_WIDE,
+        _fused_band_pairs,
+        _simhash64,
+        shingle_hash_frame,
     )
     from local_datalakehouse_phase2_spark.sources.loaders import parallel_scan
 
+    base = shingle_hash_frame(parallel_scan(spark, sf_small, "documents")).select(
+        "doc_id",
+        "hs",
+        _simhash64("hs").alias("s1"),
+        _simhash64(F.expr(_H2_FROM_HS)).alias("s2"),
+    )
     got = {
         (r.doc_a, r.doc_b)
-        for r in simhash_wide_hamming_pairs(parallel_scan(spark, sf_small, "documents"))
+        for r in _fused_band_pairs(base, **_SIMHASH_WIDE)
         .filter("hamming <= 6")
         .collect()
     }
-    sigs = _simhash_wide_sigs(parallel_scan(spark, sf_small, "documents")).collect()
+    sigs = base.select("doc_id", "s1", "s2").collect()
     ids = np.array([r.doc_id for r in sigs])
     s1 = np.array([r.s1 for r in sigs], dtype=np.int64).astype(np.uint64)
     s2 = np.array([r.s2 for r in sigs], dtype=np.int64).astype(np.uint64)
@@ -232,7 +244,7 @@ def test_ratcheted_floors_catch_recall_regression(spark, sf_small):
     from pyspark.sql import functions as F
 
     from local_datalakehouse_phase2_spark.operators.dedup import (
-        _SIMHASH64_COMBO_KEYS,
+        _SIMHASH64,
         _SIMHASH_FLOORS,
         _SIMHASH_WIDE_FLOORS,
         _floors,
@@ -247,12 +259,7 @@ def test_ratcheted_floors_catch_recall_regression(spark, sf_small):
     base = shingle_hash_frame(d).select(
         "doc_id", "hs", _simhash64("hs").alias("simhash")
     )
-    pairs = _fused_band_pairs(
-        base,
-        combo_keys=_SIMHASH64_COMBO_KEYS,
-        ham_sql="bit_count(a.simhash ^ b.simhash)",
-        sim_cols=("simhash",),
-    )
+    pairs = _fused_band_pairs(base, **_SIMHASH64)
     floors = _floors(sf_small, _SIMHASH_FLOORS, (0.9, 0.7))
     assert floors != (0.9, 0.7)  # the fixture actually hits a ratchet
     ok = _flags_summary(pairs, *floors).collect()[0]

@@ -172,9 +172,9 @@ def _stress_mutex(backend):
     kind, arg = backend
     if kind == "flock":
         return FlockMutex(arg)
-    from local_datalakehouse_phase2_spark.lakehouse.fs import EndpointMutex
+    from local_datalakehouse_phase2_spark.lakehouse.fs import HttpCasMutex
 
-    return EndpointMutex(arg)
+    return HttpCasMutex(arg)
 
 
 def _stress_writer(table_dir, backend, n_appends):
@@ -257,8 +257,8 @@ def _stress_maintenance(table_dir, backend, iterations, out_path):
 import pytest
 
 
-@pytest.mark.parametrize("backend_kind", ["flock", "endpoint"])
-def test_maintenance_under_live_ingest_stress(tmp_path, backend_kind):
+@pytest.mark.parametrize("backend_kind", ["flock", "http"])
+def test_maintenance_under_live_ingest_stress(tmp_path, request, backend_kind):
     from local_datalakehouse_phase2_spark.lakehouse import LakehouseTable
     from local_datalakehouse_phase2_spark.lakehouse.log import LogEntry
 
@@ -266,7 +266,7 @@ def test_maintenance_under_live_ingest_stress(tmp_path, backend_kind):
     backend = (
         ("flock", str(tmp_path / "stress_locks"))
         if backend_kind == "flock"
-        else ("endpoint", str(tmp_path / "stress.db"))
+        else ("http", request.getfixturevalue("casd_endpoint"))
     )
     os.makedirs(os.path.join(table_dir, "data"))
     # seed v0 (un-contended) so both processes see an existing table

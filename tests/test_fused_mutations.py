@@ -109,13 +109,7 @@ def _fused_simhash(df, mutate=None):
     base = dedup.shingle_hash_frame(df).select(
         "doc_id", "hs", dedup._simhash64("hs").alias("simhash")
     )
-    return dedup._fused_band_pairs(
-        base,
-        combo_keys=dedup._SIMHASH64_COMBO_KEYS,
-        ham_sql="bit_count(a.simhash ^ b.simhash)",
-        sim_cols=("simhash",),
-        _mutate=mutate,
-    )
+    return dedup._fused_band_pairs(base, **dedup._SIMHASH64, _mutate=mutate)
 
 
 def test_c0_all_breaks_fused_contract(midsim_corpus):

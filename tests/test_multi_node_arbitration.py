@@ -1,4 +1,5 @@
-"""Multi-HOST CAS arbitration via EndpointMutex (VERDICT r10 task #8).
+"""Multi-HOST CAS arbitration through a shared endpoint (VERDICT r10
+task #8).
 
 tests/test_flock_mutex.py proves host-wide arbitration; its docstring
 (fs.py FlockMutex) names the remaining gap: two DIFFERENT hosts share
@@ -11,7 +12,7 @@ lock_dir, exactly the two-independent-kernels situation — and proves:
 - the naive store loses a commit (both pass the version check);
 - FlockMutex with per-node lock dirs ALSO loses it (the documented
   limitation, demonstrated rather than asserted in prose);
-- EndpointMutex over one shared sqlite endpoint (the conditional-put
+- HttpCasMutex over one shared casd.py endpoint (the conditional-put
   pattern of a DynamoDB lock table / Nessie commit endpoint) loses
   nothing — with zero changes to any consumer, which is the seam's
   whole claim.
@@ -22,12 +23,11 @@ from __future__ import annotations
 import json
 import multiprocessing
 import os
-import time
 
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
-    EndpointMutex,
     FlockMutex,
+    HttpCasMutex,
 )
 from local_datalakehouse_phase2_spark.lakehouse.log import TransactionLog
 
@@ -41,7 +41,7 @@ def _mk_io(barrier, backend):
     if backend is None:
         return io
     kind, arg = backend
-    mutex = FlockMutex(arg) if kind == "flock" else EndpointMutex(arg)
+    mutex = FlockMutex(arg) if kind == "flock" else HttpCasMutex(arg)
     return ArbitratedFileIO(io, mutex=mutex)
 
 
@@ -91,51 +91,29 @@ def test_two_nodes_flock_with_separate_lock_dirs_loses(tmp_path):
     assert len(_writers(meta)) == 2  # LOST — flock is host-wide only
 
 
-def test_two_nodes_endpoint_mutex_loses_nothing(tmp_path):
+def test_two_nodes_cas_endpoint_loses_nothing(tmp_path, casd_endpoint):
     meta = _seeded(tmp_path, "endpoint")
-    db = str(tmp_path / "endpoint.db")  # the shared 'catalog service'
-    _race(meta, ("endpoint", db), ("endpoint", db))
+    # casd_endpoint is the shared 'catalog service'
+    _race(meta, ("http", casd_endpoint), ("http", casd_endpoint))
     assert _writers(meta) == {"seed", "a", "b"}  # all three survive
 
 
-def test_endpoint_mutex_steals_crashed_holder(tmp_path, monkeypatch):
-    """A holder row left by a crashed process must not wedge the
-    endpoint forever: past LOCK_STEAL_SECONDS the next waiter takes
-    over (the DynamoDB-TTL presumption)."""
-    from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
-
-    monkeypatch.setattr(lh_log, "LOCK_STEAL_SECONDS", 0.05)
-    db = str(tmp_path / "endpoint.db")
-    mutex = EndpointMutex(db)
-    con = mutex._connect()
-    con.execute(
-        "INSERT INTO locks VALUES (?, ?, ?)",
-        (os.path.realpath(str(tmp_path / "p")), "dead-proc", time.time() - 1.0),
-    )
-    con.close()
-    t0 = time.monotonic()
-    with mutex(str(tmp_path / "p")):
-        pass
-    assert time.monotonic() - t0 < 5.0  # stolen, not timed out
-
-
-def test_endpoint_mutex_contention_loop(tmp_path):
+def test_cas_endpoint_contention_loop(tmp_path, casd_endpoint):
     """20 interleaved appends from two nodes through the endpoint:
     every commit survives, versions stay dense."""
 
-    def worker(meta, db, tag, n, out_dir):
-        log = TransactionLog(meta, io=_mk_io(None, ("endpoint", db)))
+    def worker(meta, endpoint, tag, n, out_dir):
+        log = TransactionLog(meta, io=_mk_io(None, ("http", endpoint)))
         for i in range(n):
             log.append(_entry_maker(f"{tag}{i}"))
         with open(os.path.join(out_dir, f"{tag}.json"), "w") as f:
             json.dump({"done": n}, f)
 
     meta = _seeded(tmp_path, "loop")
-    db = str(tmp_path / "loop.db")
     out = str(tmp_path / "loop_out")
     os.makedirs(out)
-    pa = _MP.Process(target=worker, args=(meta, db, "a", 10, out))
-    pb = _MP.Process(target=worker, args=(meta, db, "b", 10, out))
+    pa = _MP.Process(target=worker, args=(meta, casd_endpoint, "a", 10, out))
+    pb = _MP.Process(target=worker, args=(meta, casd_endpoint, "b", 10, out))
     pa.start(), pb.start()
     pa.join(60), pb.join(60)
     assert pa.exitcode == 0 and pb.exitcode == 0

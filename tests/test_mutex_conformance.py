@@ -9,16 +9,16 @@ proven drop-in: add its spec to BACKENDS (and LEASE_BACKENDS if it
 steals by TTL) and the whole contract re-runs.
 
 Backends under test here:
-- endpoint-sqlite: EndpointMutex, the conditional-put stand-in for the
-  DynamoDB/Nessie commit-arbiter role (reference stack:
-  spark/conf/spark-defaults.conf Nessie catalog; docker-compose
-  delegates commit arbitration to the Nessie service);
+- http-cas: HttpCasMutex against a casd.py server, the remote-shaped
+  conditional-put lease for the DynamoDB/Nessie commit-arbiter role
+  (reference stack: spark/conf/spark-defaults.conf Nessie catalog;
+  docker-compose delegates commit arbitration to the Nessie service);
 - flock-shared-dir: FlockMutex over ONE lock dir — the host-scope
   adapter (two processes on one kernel), which must satisfy the same
   contract at its documented scope.
 
 Workers are forked processes sharing nothing but the backend's own
-medium (db file / lock dir) plus the data files the races target.
+medium (TCP endpoint / lock dir) plus the data files the races target.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ import pytest
 
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
-    EndpointMutex,
     FlockMutex,
     HttpCasMutex,
     LocalFileIO,
@@ -44,23 +43,19 @@ _MP = multiprocessing.get_context("fork")
 # "http-cas" is the genuinely remote-shaped one (r15): workers share
 # NOTHING but the TCP endpoint of a casd.py server subprocess.
 BACKENDS = [
-    pytest.param(("endpoint", "endpoint.db"), id="endpoint-sqlite"),
     pytest.param(("flock", "shared_locks"), id="flock-shared-dir"),
     pytest.param(("http", None), id="http-cas"),
 ]
 # backends whose crash-liveness mechanism is a TTL steal on the holder
 # record (clause 4's lease half; flock releases via the kernel instead)
 LEASE_BACKENDS = [
-    pytest.param(("endpoint", "endpoint.db"), id="endpoint-sqlite"),
     pytest.param(("http", None), id="http-cas"),
 ]
-_LEASE_KINDS = ("endpoint", "http")
+_LEASE_KINDS = ("http",)
 
 
 def _make_mutex(spec, **kw):
     kind, arg = spec
-    if kind == "endpoint":
-        return EndpointMutex(arg, **kw)
     if kind == "flock":
         return FlockMutex(arg)
     if kind == "http":
@@ -180,7 +175,7 @@ def _acquire_after_crash(spec, lock_path, out_path):
 
 def test_crashed_holder_releases(backend, tmp_path):
     """Kill a holder mid-hold: the next waiter must acquire —
-    kernel-released (flock) or TTL-stolen (endpoint)."""
+    kernel-released (flock) or TTL-stolen (http-cas)."""
     lock_target = str(tmp_path / "res")
     held = _MP.Event()
     holder = _MP.Process(target=_hold_and_die, args=(backend, lock_target, held))
@@ -223,22 +218,14 @@ def test_live_holder_not_stolen(lease_backend, tmp_path):
 
 
 def _seed_stale_row(spec, lock_path):
-    mutex = _make_mutex(spec)
-    canon = os.path.realpath(lock_path)
-    if spec[0] == "endpoint":
-        con = mutex._connect()
-        con.execute(
-            "INSERT INTO locks VALUES (?, ?, ?)",
-            (canon, "dead-proc", time.time() - 3600.0),
-        )
-        con.close()
-    elif spec[0] == "http":
-        mutex._post(
-            "/_seed",
-            {"path": canon, "owner": "dead-proc", "acquired_at": time.time() - 3600.0},
-        )
-    else:
-        raise ValueError(spec[0])
+    _make_mutex(spec)._post(
+        "/_seed",
+        {
+            "path": os.path.realpath(lock_path),
+            "owner": "dead-proc",
+            "acquired_at": time.time() - 3600.0,
+        },
+    )
 
 
 def _thief_worker(spec, lock_path, counter_path, n):
@@ -369,11 +356,22 @@ def test_release_tolerates_dead_endpoint(tmp_path):
             p.wait(timeout=10)
 
 
-# ---- clause 4e (fencing at WRITE, both lease backends): stalled
+# ---- clause 4e (fencing at WRITE, every lease backend): stalled
 # holder's commit is REJECTED, not merely flagged (r16, VERDICT item 1)
 
+# Both arbitrated entry points: plain `create_exclusive` (txn markers,
+# ref locks) and `create_exclusive_guarded`, the one every log.append
+# commit goes through.
+CREATE_ENTRIES = ["create_exclusive", "create_exclusive_guarded"]
 
-def _stalled_fenced_writer(spec, target, held_evt, resume_evt, out_path):
+
+def _arbitrated_create(io, entry, target, data):
+    if entry == "create_exclusive_guarded":
+        return io.create_exclusive_guarded(target, data, lambda: True)
+    return io.create_exclusive(target, data)
+
+
+def _stalled_fenced_writer(spec, entry, target, held_evt, resume_evt, out_path):
     """Victim: acquire through ArbitratedFileIO's fence-checked path,
     stall past the TTL INSIDE the hold (the GC-pause shape: after
     acquire, before the protected write), then attempt the write."""
@@ -399,7 +397,7 @@ def _stalled_fenced_writer(spec, target, held_evt, resume_evt, out_path):
 
     io = ArbitratedFileIO(LocalFileIO(), mutex=stalling_mutex)
     try:
-        won = io.create_exclusive(target, "victim")
+        won = _arbitrated_create(io, entry, target, "victim")
     except StaleFenceError:
         verdict = "rejected-at-write"
     except LockStolenError:
@@ -410,7 +408,7 @@ def _stalled_fenced_writer(spec, target, held_evt, resume_evt, out_path):
         f.write(verdict)
 
 
-def _fenced_thief_commit(spec, target, done_evt):
+def _fenced_thief_commit(spec, entry, target, done_evt):
     """Thief: steal the aged hold and commit through the SAME
     fence-checked path, then release cleanly."""
     from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
@@ -421,30 +419,33 @@ def _fenced_thief_commit(spec, target, done_evt):
 
     lh_log.LOCK_STEAL_SECONDS = 0.3
     io = ArbitratedFileIO(LocalFileIO(), mutex=_make_mutex(spec, timeout_s=20.0))
-    assert io.create_exclusive(target, "thief")
+    assert _arbitrated_create(io, entry, target, "thief")
     done_evt.set()
 
 
-def test_fenced_write_rejects_stalled_holder(lease_backend, tmp_path):
-    """Three processes (victim, thief, arbiter endpoint/db): the victim
+@pytest.mark.parametrize("entry", CREATE_ENTRIES)
+def test_fenced_write_rejects_stalled_holder(lease_backend, entry, tmp_path):
+    """Three processes (victim, thief, arbiter endpoint): the victim
     acquires, stalls past LOCK_STEAL_SECONDS while holding, the thief
     steals the path and COMMITS; the victim's late write must bounce
     with StaleFenceError BEFORE reaching the medium — the thief's
     bytes stand and the victim learns at the write, not the release.
     This closes the clause-4 lease caveat release-time LockStolenError
-    (clause 4d above) only reports, on BOTH lease backends."""
+    (clause 4d above) only reports, through BOTH arbitrated entry
+    points."""
     target = str(tmp_path / "res.json")
     held, resume, thief_done = _MP.Event(), _MP.Event(), _MP.Event()
     out = str(tmp_path / "verdict")
     victim = _MP.Process(
         target=_stalled_fenced_writer,
-        args=(lease_backend, target, held, resume, out),
+        args=(lease_backend, entry, target, held, resume, out),
     )
     victim.start()
     assert held.wait(10)
     time.sleep(0.4)  # age the victim's holder row past the lowered TTL
     thief = _MP.Process(
-        target=_fenced_thief_commit, args=(lease_backend, target, thief_done)
+        target=_fenced_thief_commit,
+        args=(lease_backend, entry, target, thief_done),
     )
     thief.start()
     assert thief_done.wait(10)

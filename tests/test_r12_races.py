@@ -1,6 +1,7 @@
 """Round-12 race self-review (VERDICT r11 item 7): the seams added
 this round and last — direct per-table merge vs the catalog-branch
-protocol, and EndpointMutex stealing from a live (stalled) holder."""
+protocol, and the lease mutex (HttpCasMutex) stealing from a live
+(stalled) holder."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from local_datalakehouse_phase2_spark.lakehouse import (
     merge_branch,
     rebase_branch,
 )
-from local_datalakehouse_phase2_spark.lakehouse.fs import EndpointMutex
+from local_datalakehouse_phase2_spark.lakehouse.fs import HttpCasMutex
 
 
 def _df(spark, *rows):
@@ -52,7 +53,7 @@ def test_direct_merge_of_managed_catalog_ref_refused(spark, tmp_path):
     }
 
 
-def test_endpoint_mutex_steal_from_live_holder(tmp_path, monkeypatch):
+def test_endpoint_mutex_steal_from_live_holder(tmp_path, monkeypatch, casd_endpoint):
     """A thief stealing a stalled-but-alive holder's row must (a) win
     exactly once, (b) survive the stalled holder's eventual release
     (conditional delete on owner is a no-op — and since r16's fencing
@@ -63,7 +64,7 @@ def test_endpoint_mutex_steal_from_live_holder(tmp_path, monkeypatch):
     from local_datalakehouse_phase2_spark.lakehouse.fs import LockStolenError
 
     monkeypatch.setattr(_log, "LOCK_STEAL_SECONDS", 0.2)
-    mx = EndpointMutex(str(tmp_path / "locks.db"), timeout_s=5.0)
+    mx = HttpCasMutex(casd_endpoint, timeout_s=5.0)
     path = str(tmp_path / "res")
 
     events: list[str] = []
@@ -108,36 +109,27 @@ def test_endpoint_mutex_steal_from_live_holder(tmp_path, monkeypatch):
     assert events[-1] == "third-in"
 
 
-def test_endpoint_mutex_concurrent_thieves_exclude(tmp_path, monkeypatch):
-    """Eight thieves racing to steal ONE stale row: the BEGIN IMMEDIATE
-    read-check-update must serialize them — at most one inside the
-    critical section at any instant, every thread eventually through."""
-    import sqlite3
+def test_endpoint_mutex_concurrent_thieves_exclude(tmp_path, monkeypatch, casd_endpoint):
+    """Eight thieves racing to steal ONE stale row: the endpoint's
+    atomic read-check-update must serialize them — at most one inside
+    the critical section at any instant, every thread eventually
+    through."""
+    import os
 
     from local_datalakehouse_phase2_spark.lakehouse import log as _log
 
     monkeypatch.setattr(_log, "LOCK_STEAL_SECONDS", 0.05)
-    db = str(tmp_path / "locks.db")
-    mx = EndpointMutex(db, timeout_s=20.0)
+    mx = HttpCasMutex(casd_endpoint, timeout_s=20.0)
     path = str(tmp_path / "res")
     # plant a stale row from a "crashed" holder
-    con = sqlite3.connect(db)
-    con.execute(
-        "CREATE TABLE IF NOT EXISTS locks ("
-        " path TEXT PRIMARY KEY, owner TEXT, acquired_at REAL)"
+    mx._post(
+        "/_seed",
+        {
+            "path": os.path.realpath(path),
+            "owner": "dead-holder",
+            "acquired_at": time.time() - 60,
+        },
     )
-    canon_probe = []
-    with mx(str(tmp_path / "probe")):
-        canon_probe.append(True)  # ensures table exists via the mutex itself
-    import os
-
-    canon = os.path.realpath(path)
-    con.execute(
-        "INSERT OR REPLACE INTO locks VALUES (?, ?, ?)",
-        (canon, "dead-holder", time.time() - 60),
-    )
-    con.commit()
-    con.close()
 
     inside = [0]
     max_inside = [0]

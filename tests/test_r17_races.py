@@ -4,10 +4,10 @@ listing — e.g. it stalled in the arbiter's mutex queue while the
 maintenance process committed, checkpointed, and expired — could win
 O_EXCL on a freed slot and land BELOW the table head, where every
 checkpoint-anchored fold silently skips it. Observed as a ~1-in-5
-failure of test_flock_mutex.py::test_maintenance_under_live_ingest_
-stress[endpoint] on a loaded host (row total 190 != 200, the forensic
-event log showing `append-committed v=1` seconds after maintenance had
-committed v1-v6 and expired v1).
+failure of the lease-backend leg of test_flock_mutex.py::
+test_maintenance_under_live_ingest_stress on a loaded host (row total
+190 != 200, the forensic event log showing `append-committed v=1`
+seconds after maintenance had committed v1-v6 and expired v1).
 
 The closure (log.append + fs.create_exclusive_guarded/remove_
 arbitrated): expiry checkpoints BEFORE dropping entries and checkpoints
@@ -25,7 +25,7 @@ import time
 
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
-    EndpointMutex,
+    HttpCasMutex,
 )
 from local_datalakehouse_phase2_spark.lakehouse.log import LogEntry, TransactionLog
 
@@ -45,10 +45,9 @@ def _mk(op="append", files=()):
     return make
 
 
-def test_stale_claim_never_reclaims_expired_slot(tmp_path):
+def test_stale_claim_never_reclaims_expired_slot(tmp_path, casd_endpoint):
     meta = str(tmp_path / "t" / "metadata")
-    db = str(tmp_path / "locks.db")
-    io = ArbitratedFileIO(RacyFileIO(), mutex=EndpointMutex(db))
+    io = ArbitratedFileIO(RacyFileIO(), mutex=HttpCasMutex(casd_endpoint))
     log = TransactionLog(meta, io=io)
     for _ in range(5):  # v0..v4
         log.append(_mk())
@@ -85,15 +84,14 @@ def test_guarded_create_precondition_blocks_write(tmp_path):
     assert open(p).read() == "data"
 
 
-def test_remove_arbitrated_serializes_with_guarded_create(tmp_path):
+def test_remove_arbitrated_serializes_with_guarded_create(tmp_path, casd_endpoint):
     """remove_arbitrated takes the same per-path mutex the guarded
     create holds, so a free and a claim on one slot cannot interleave:
     with the claim's precondition waiting on an armed barrier-free
     sequence, the ordering is free-then-claim or claim-then-free, and
     in both orders the slot cannot be silently resurrected below a
     checkpoint floor (the floor read happens under the same hold)."""
-    db = str(tmp_path / "locks.db")
-    io = ArbitratedFileIO(RacyFileIO(), mutex=EndpointMutex(db))
+    io = ArbitratedFileIO(RacyFileIO(), mutex=HttpCasMutex(casd_endpoint))
     p = str(tmp_path / "0000000001.json")
     io.write_text_atomic(p, "old")
     io.remove_arbitrated(p)

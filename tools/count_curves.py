@@ -41,8 +41,8 @@ from local_datalakehouse_phase2_spark.operators.dedup import (
     _fused_band_pairs,
     _fused_keyed,
     _H2_FROM_HS,
-    _SIMHASH64_COMBO_KEYS,
-    _SIMHASH_WIDE_COMBO_KEYS,
+    _SIMHASH64,
+    _SIMHASH_WIDE,
     _simhash64,
     band_keys,
     lsh_candidate_pairs,
@@ -123,14 +123,11 @@ def _entry_counts(spark, sf_dir: str, which: str) -> dict:
             _simhash64(F.expr(_H2_FROM_HS)).alias("s2"),
         )
         keyed = _fused_keyed(
-            base, combo_keys=_SIMHASH_WIDE_COMBO_KEYS, sim_cols=("s1", "s2")
-        )
-        pairs = _fused_band_pairs(
             base,
-            combo_keys=_SIMHASH_WIDE_COMBO_KEYS,
-            ham_sql="bit_count(a.s1 ^ b.s1) + bit_count(a.s2 ^ b.s2)",
-            sim_cols=("s1", "s2"),
+            combo_keys=_SIMHASH_WIDE["combo_keys"],
+            sim_cols=_SIMHASH_WIDE["sim_cols"],
         )
+        pairs = _fused_band_pairs(base, **_SIMHASH_WIDE)
         out = {"fams": _bucket_counts(keyed)}
         out.update(_pair_counts(pairs, has_combo=True))
         return out
@@ -139,14 +136,9 @@ def _entry_counts(spark, sf_dir: str, which: str) -> dict:
             "doc_id", "hs", _simhash64("hs").alias("simhash")
         )
         keyed = _fused_keyed(
-            base, combo_keys=_SIMHASH64_COMBO_KEYS, sim_cols=("simhash",)
+            base, combo_keys=_SIMHASH64["combo_keys"], sim_cols=_SIMHASH64["sim_cols"]
         )
-        pairs = _fused_band_pairs(
-            base,
-            combo_keys=_SIMHASH64_COMBO_KEYS,
-            ham_sql="bit_count(a.simhash ^ b.simhash)",
-            sim_cols=("simhash",),
-        )
+        pairs = _fused_band_pairs(base, **_SIMHASH64)
         out = {"fams": _bucket_counts(keyed)}
         out.update(_pair_counts(pairs, has_combo=True))
         return out
