@@ -1,4 +1,4 @@
-"""Driver-side parquet writer for LocalRelation-backed tiny commits.
+"""Driver-side parquet writer for commits whose rows the driver holds.
 
 A lakehouse commit of a driver-known frame (metadata rows, lifecycle
 fixtures, SQL result feeds — every `localrows.local_df` product) does
@@ -12,24 +12,26 @@ frame is `repartition(n, cols)` over a LocalRelation (r15:
 so even row->file assignment matches the Spark writer) — preserving
 everything the engine and the DuckDB second engine read back:
 
-- value fidelity: types map 1:1 (timestamps written as
-  TIMESTAMP(MICROS) with the correct isAdjustedToUTC flag per
-  TimestampType vs TimestampNTZType; collected naive datetimes are
-  interpreted in the driver's local zone exactly as PySpark rendered
-  them);
+- value fidelity: types map 1:1 (TimestampType written as INT96, as
+  Spark's writer does; collected naive datetimes are interpreted in
+  the driver's local zone exactly as PySpark rendered them);
 - footer stats: pyarrow records the same per-column min/max/null-count
   metrics `TableFile._scan_written` harvests into FileInfo for scan
   pruning;
 - row order: collect order == stored order, so file_row_number-based
   position deletes planned later against the file stay valid.
 
-`Table._write_files` gates the fast path hard (plain-local path, no
-partition spec, distribution-mode none, no sort order, under the
-target file size) and falls back to the Spark writer for anything
-this module returns None for. Empty frames write ONE empty
-schema-bearing file, matching Spark's FileFormatWriter special case. At 100 TB the path is never
-data-bearing — real data never routes through literal rows — but a
-1000-executor pipeline's per-commit METADATA writes stop paying a
+`LakehouseTable._write_files` decides when the rows are in hand (see
+`localrows`): a LocalRelation-backed frame, or a rewrite whose logged
+row bound is at most `localrows.WRITE_MAX`, on a plain-local
+warehouse with no partition spec, distribution-mode none and no sort
+order. Its `_write_rows` writes data and position-delete files through
+this module alike, and falls back to the Spark writer for anything
+`rows_to_arrow` returns None for or any file over the target size.
+Empty frames write ONE empty schema-bearing file, matching Spark's
+FileFormatWriter special case. At 100 TB the path never carries more
+than `WRITE_MAX` rows of a commit, but a 1000-executor pipeline's
+per-commit METADATA writes and small row-level rewrites stop paying a
 cluster job each.
 """
 
@@ -43,10 +45,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import types as T
 
 __all__ = ["rows_to_arrow", "write_rows", "spark_partition_ids"]
-
-# conversion cap: beyond this the frame is not "tiny metadata" and the
-# Spark writer's distribution machinery should own it
-MAX_ROWS = 10_000
 
 
 def _arrow_type(dt: T.DataType) -> pa.DataType | None:
@@ -241,8 +239,6 @@ def rows_to_arrow(rows, schema: T.StructType) -> pa.Table | None:
     """Collected Rows + their Spark schema -> a pyarrow Table, or None
     when a column's type is outside the supported map (caller falls
     back to the Spark writer)."""
-    if len(rows) > MAX_ROWS:
-        return None
     fields = []
     for f in schema.fields:
         at = _arrow_type(f.dataType)

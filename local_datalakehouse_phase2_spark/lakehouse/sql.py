@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 from . import maintenance
 from .catalog import CatalogError, Lakehouse
 from .log import CommitConflictError
+from .. import localrows
 from ..localrows import local_df
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
@@ -786,8 +787,8 @@ class LakehouseSQL:
             while cur is not None and cur in hist:
                 chain.append((cur, hist[cur].made_current_at))
                 cur = hist[cur].parent_id
-            return local_df(self.spark, 
-                chain, "snapshot_id long, made_current_at timestamp"
+            return localrows.collected_df(
+                self.spark, chain, "snapshot_id long, made_current_at timestamp"
             )
         elif proc == "add_files":
             # Iceberg's bulk-adoption procedure: existing parquet joins

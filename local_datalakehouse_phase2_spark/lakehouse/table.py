@@ -45,7 +45,7 @@ from . import pruning
 from .fs import FileIO, LocalFileIO
 from .log import CommitConflictError, FileInfo, LogEntry, TransactionLog
 from .partition import PROP_PARTITION_SPEC, PROP_PARTITION_SPEC_HISTORY
-from ..localrows import _MAX_ROWS as _LOCAL_VALUES_MAX
+from .. import localrows
 from ..localrows import local_df
 from ..sources.loaders import read_parquet
 
@@ -73,13 +73,6 @@ def _parse_ddl_cached(ddl: str) -> T.DataType:
     return copy.deepcopy(st)
 
 
-def _is_local_relation(plan) -> bool:
-    """True for a LocalRelation logical plan: rows the driver already
-    holds, so collecting them runs no Spark job
-    (LocalTableScanExec.executeCollect)."""
-    return plan.getClass().getSimpleName() == "LocalRelation"
-
-
 # key types whose Python equality on collected values is Spark's
 # grouping equality (floats differ on NaN and -0.0; binaries and
 # nested values collect unhashable)
@@ -95,14 +88,6 @@ _DRIVER_KEY_TYPES = (
     T.TimestampType,
     T.TimestampNTZType,
 )
-
-
-def _driver_rows(df: DataFrame) -> list | None:
-    """`df`'s rows when its optimized plan is a LocalRelation (every
-    `local_df` product), collected without a job; else None."""
-    if not _is_local_relation(df._jdf.queryExecution().optimizedPlan()):
-        return None
-    return df.collect()
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # Iceberg default; guide :234
 
@@ -1428,8 +1413,7 @@ class LakehouseTable:
             rows.append(
                 (
                     e.snapshot_id,
-                    # naive UTC timestamp (session TZ is UTC)
-                    _dt.datetime.fromtimestamp(e.committed_at, _dt.timezone.utc).replace(tzinfo=None),
+                    _dt.datetime.fromtimestamp(e.committed_at, _dt.timezone.utc),
                     e.operation,
                     len(e.added_files),
                     len(e.removed_files),
@@ -1501,9 +1485,7 @@ class LakehouseTable:
             cur = parent.get(cur)
         rows = [
             (
-                _dt.datetime.fromtimestamp(e.committed_at, _dt.timezone.utc).replace(
-                    tzinfo=None
-                ),
+                _dt.datetime.fromtimestamp(e.committed_at, _dt.timezone.utc),
                 e.snapshot_id,
                 parent[e.snapshot_id],
                 e.snapshot_id in ancestors,
@@ -1951,15 +1933,14 @@ class LakehouseTable:
             ~F.coalesce(cond.cast("boolean"), F.lit(False))
         )
         # survivors are a subset of the affected files' rows, so the
-        # logged byte total is a sound (upper-bound) size estimate:
-        # skip the measure-then-shape staging write entirely
-        if ref is None and self._logged_rows(affected) <= _LOCAL_VALUES_MAX:
-            survivors = self._localize_commit_frame(survivors)
+        # logged byte and row totals are sound upper bounds: skip the
+        # measure-then-shape staging write entirely
         return self._commit_write(
             survivors,
             operation="delete",
             removed=tuple(affected),
             input_bytes=self._logged_bytes(affected, ref=ref),
+            input_rows=self._logged_rows(affected, ref=ref),
             deletes_fingerprint=fingerprint,
             branch=ref,
             extra=extra,
@@ -2023,76 +2004,34 @@ class LakehouseTable:
         whose interposition then sees every byte."""
         return "://" not in self.table_dir and type(self.io) is LocalFileIO
 
-    def _collect_at_most(self, df: DataFrame, cap: int) -> list | None:
-        """`df`'s rows when it has at most `cap` of them and the
-        warehouse is plain-local, else None. One bounded scan
-        (`limit(cap + 1)`), so what a row-level op matches — not the
-        table's size — picks its collect-then-pyarrow path; a match
-        over `cap` costs this probe on top of the distributed path."""
-        if not self._plain_local():
-            return None
-        rows = df.limit(cap + 1).collect()
-        return rows if len(rows) <= cap else None
-
-    def _localize_commit_frame(self, df: DataFrame) -> DataFrame:
-        """Collect a lifecycle-scale commit frame (callers gate on the
-        logged row counts of the files it is read from, plus a MERGE's
-        source rows) and rebuild it as a pure-JVM LocalRelation so the
-        following `_write_files` takes the pyarrow fast path: one
-        collect job replaces the Spark write job plus the committer's
-        temp-dir rename dance. If the collected set still exceeds
-        localrows' VALUES cap, the original frame is returned and the
-        Spark writer keeps it."""
-        if not self._plain_local():
-            return df
-        rows = df.collect()
-        if len(rows) > _LOCAL_VALUES_MAX:
-            return df
-        return local_df(self.spark, [tuple(r) for r in rows], df.schema)
-
-    def _write_pos_deletes_rows(
-        self, rows
-    ) -> tuple[tuple[FileInfo, ...], list[str]]:
-        """Driver-side variant of `_write_pos_deletes` for collected
-        (file_path, pos) rows (callers bound them with
-        `_collect_at_most`): python-sorts them — same (file_path, pos)
-        order contract, the footer bounds reads use to scope the
-        anti-join — and writes ONE pyarrow file, skipping the
-        global-sort shuffle, the committer rename dance, and the
-        referenced-files re-read job (the distinct file_paths come
-        straight from the rows in hand)."""
-        rows = sorted(tuple(r) for r in rows)
-        if not rows:
-            return (), []
-        referenced = sorted({fp for fp, _ in rows})
-        tbl = fastwrite.rows_to_arrow(rows, POS_DELETE_SCHEMA)
-        out = os.path.join(self.data_dir, f"v{uuid.uuid4().hex[:12]}")
-        os.makedirs(out, exist_ok=True)
-        fastwrite.write_rows(
-            tbl, os.path.join(out, f"part-00000-{uuid.uuid4().hex[:12]}.parquet")
-        )
-        delete_files = tuple(
-            _dc_replace(fi, content=1) for fi in self._scan_written(out)
-        )
-        return delete_files, referenced
-
     def _write_pos_deletes(
-        self, matches: DataFrame
+        self, matches: DataFrame, rows: list | None = None
     ) -> tuple[tuple[FileInfo, ...], list[str]]:
         """Write `matches` (file_path, pos) as content=1 position-delete
         file(s), sorted by (file_path, pos) so each delete file's footer
         bounds the data-file range it references — what lets reads
         scope the anti-join to possibly-affected files only. Returns
         (delete FileInfos, referenced data-file rel paths); both empty
-        when nothing matched (the written dir is cleaned up).
+        when nothing matched.
 
-        Sizing: a GLOBAL orderBy (range shuffle) whose partition count
-        AQE picks from the actual tombstone bytes — a 5-row DELETE
-        writes ONE delete file, a billion-row delete writes many, with
-        no explicit parallelism knob (an explicit
-        repartitionByRange(defaultParallelism) here once sprayed tiny
-        deletes across 32 one-row files — delete-file explosion the
-        read path then pays for on every scan)."""
+        `rows` are the (file_path, pos) rows when the caller holds them:
+        sorted on the driver and written as ONE pyarrow file, with no
+        sort shuffle, committer rename or referenced-files re-read.
+        Otherwise the sort is distributed: a GLOBAL orderBy (range
+        shuffle) whose partition count AQE picks from the actual
+        tombstone bytes — a 5-row DELETE writes ONE delete file, a
+        billion-row delete writes many, with no explicit parallelism
+        knob (an explicit repartitionByRange(defaultParallelism) here
+        once sprayed tiny deletes across 32 one-row files — delete-file
+        explosion the read path then pays for on every scan)."""
+        if rows is not None:
+            rows = sorted(tuple(r) for r in rows)
+            if not rows:
+                return (), []
+            files = self._write_rows([(0, rows)], POS_DELETE_SCHEMA)
+            if files is not None:
+                referenced = sorted({fp for fp, _ in rows})
+                return tuple(_dc_replace(fi, content=1) for fi in files), referenced
         pre = matches.orderBy("file_path", "pos")
         out_dir = os.path.join(self.data_dir, f"v{uuid.uuid4().hex[:12]}")
         pre.write.mode("error").parquet(out_dir)
@@ -2170,13 +2109,9 @@ class LakehouseTable:
         matches = tagged.filter(cond).select(
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
-        held = self._collect_at_most(matches, fastwrite.MAX_ROWS)
-        if held is not None:
-            # few matched rows: the bounded matched scan replaces the
-            # sort-shuffle + write + referenced re-read
-            delete_files, referenced = self._write_pos_deletes_rows(held)
-        else:
-            delete_files, referenced = self._write_pos_deletes(matches)
+        local = self._plain_local()
+        held = localrows.collect_at_most(matches, localrows.WRITE_MAX) if local else None
+        delete_files, referenced = self._write_pos_deletes(matches, held)
         if not delete_files:  # nothing matched: no commit
             return self.log.read_entry(self.log.latest_version())
         return self._commit_mor(
@@ -2299,13 +2234,12 @@ class LakehouseTable:
             else:
                 exprs.append(F.col(f.name))
         rewritten = self._read_rel(affected, ref=ref).select(*exprs)
-        if ref is None and self._logged_rows(affected) <= _LOCAL_VALUES_MAX:
-            rewritten = self._localize_commit_frame(rewritten)
         return self._commit_write(
             rewritten,
             operation="update",
             removed=tuple(affected),
             input_bytes=self._logged_bytes(affected, ref=ref),
+            input_rows=self._logged_rows(affected, ref=ref),
             deletes_fingerprint=fingerprint,
             branch=ref,
             extra=extra,
@@ -2318,31 +2252,26 @@ class LakehouseTable:
         (condition is TRUE on every row, so assignments apply
         unconditionally); the tombstone write and the data write are
         two jobs over that filtered scan."""
-        tagged = self._tagged_read()
-        matched = tagged.filter(cond)
+        matched = self._tagged_read().filter(cond)
+        # few matched rows: collect them ONCE — tombstones come straight
+        # from their (__file, __pos), and up to the VALUES cap the
+        # updated versions re-enter as a LocalRelation so the data write
+        # takes the pyarrow fast path too. The bounded scan replaces
+        # tombstone-sort + tombstone-write + referenced re-read + data
+        # write.
+        local = self._plain_local()
+        held = localrows.collect_at_most(matched, localrows.WRITE_MAX) if local else None
+        delete_files, referenced = self._write_pos_deletes(
+            matched.select(
+                F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+            ),
+            None if held is None else [(r["__file"], r["__pos"]) for r in held],
+        )
         src = matched
-        # cap at the VALUES limit: the updated rows re-enter via
-        # local_df, which only stays a pure-JVM LocalRelation that far
-        mrows = self._collect_at_most(matched, _LOCAL_VALUES_MAX)
-        if mrows is not None:
-            # few matched rows: collect them ONCE — tombstones come
-            # straight from their (__file, __pos), and the updated
-            # versions re-enter as a LocalRelation so the data write
-            # takes the pyarrow fast path too. The bounded scan
-            # replaces tombstone-sort + tombstone-write + referenced
-            # re-read + data write.
-            delete_files, referenced = self._write_pos_deletes_rows(
-                [(r["__file"], r["__pos"]) for r in mrows]
-            )
+        if held is not None and len(held) <= localrows.VALUES_MAX:
             names = [f.name for f in schema.fields]
-            src = local_df(
-                self.spark, [tuple(r[c] for c in names) for r in mrows], schema
-            )
-        else:
-            delete_files, referenced = self._write_pos_deletes(
-                matched.select(
-                    F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
-                )
+            src = localrows.collected_df(
+                self.spark, [tuple(r[c] for c in names) for r in held], schema
             )
         if not delete_files:  # nothing matched: no commit
             return self.log.read_entry(self.log.latest_version())
@@ -2374,15 +2303,13 @@ class LakehouseTable:
         )
 
     def _logged_bytes(self, rel_paths, ref: str | None = None) -> int:
-        state = (
-            self.log.state_at_branch(ref) if ref is not None else self.log.state_at()
-        )
+        state = self.log.state_at_branch(ref) if ref is not None else self.log.state_at()
         return sum(state[p].size_bytes for p in rel_paths if p in state)
 
-    def _logged_rows(self, rel_paths) -> int:
-        """Row count of live main-lineage files, from the log — no job.
-        It bounds a copy-on-write rewrite of those files."""
-        state = self.log.state_at()
+    def _logged_rows(self, rel_paths, ref: str | None = None) -> int:
+        """Row count of live files, from the log — no job. It bounds a
+        copy-on-write rewrite of those files."""
+        state = self.log.state_at_branch(ref) if ref is not None else self.log.state_at()
         return sum(state[p].row_count for p in rel_paths if p in state)
 
     def merge(
@@ -2445,16 +2372,12 @@ class LakehouseTable:
             new_data = carried.unionByName(source)
         else:
             new_data = source
-        if (
-            ref is None
-            and self._logged_rows(affected) + source_rows <= _LOCAL_VALUES_MAX
-        ):
-            new_data = self._localize_commit_frame(new_data)
         return self._commit_write(
             new_data,
             operation="merge",
             removed=tuple(affected),
             input_bytes=self._merge_input_bytes(affected, source_rows),
+            input_rows=self._logged_rows(affected, ref=ref) + source_rows,
             extra=extra,
             deletes_fingerprint=fingerprint,
             branch=ref,
@@ -2480,11 +2403,9 @@ class LakehouseTable:
         matches = tagged.join(F.broadcast(keys), key_cols, "left_semi").select(
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         )
-        held = self._collect_at_most(matches, fastwrite.MAX_ROWS)
-        if held is not None:
-            delete_files, referenced = self._write_pos_deletes_rows(held)
-        else:
-            delete_files, referenced = self._write_pos_deletes(matches)
+        local = self._plain_local()
+        held = localrows.collect_at_most(matches, localrows.WRITE_MAX) if local else None
+        delete_files, referenced = self._write_pos_deletes(matches, held)
         aligned = source.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
@@ -2518,7 +2439,7 @@ class LakehouseTable:
         matches. A driver-held source whose keys compare in Python as
         in Spark (no floats, binaries or nested types) is checked for
         duplicates on the driver, with no job."""
-        held = _driver_rows(source)
+        held = localrows.held_rows(source)
         types = {f.name: f.dataType for f in source.schema.fields}
         if (
             held is not None
@@ -2553,7 +2474,7 @@ class LakehouseTable:
         """Row count of a MERGE source: from the rows in hand when the
         driver holds them, else one tiny count job on the (small,
         upsert-side) source."""
-        held = _driver_rows(source)
+        held = localrows.held_rows(source)
         return len(held) if held is not None else source.count()
 
     def _merge_input_bytes(self, affected: list[str], source_rows: int) -> int:
@@ -2696,11 +2617,15 @@ class LakehouseTable:
 
         if new_data is None:  # matched clauses only, nothing matched
             return self.log.read_entry(self.log.latest_version())
+        # the cardinality rule leaves at most one output row per carried
+        # target row, so logged plus source rows bound the output
+        source_rows = self._source_rows(source)
         return self._commit_write(
             new_data,
             operation="merge",
             removed=tuple(affected),
-            input_bytes=self._merge_input_bytes(affected, self._source_rows(source)),
+            input_bytes=self._merge_input_bytes(affected, source_rows),
+            input_rows=self._logged_rows(affected) + source_rows,
             extra=extra,
             deletes_fingerprint=fingerprint,
         )
@@ -2738,13 +2663,14 @@ class LakehouseTable:
         operation: str,
         removed: tuple[str, ...],
         input_bytes: int | None = None,
+        input_rows: int | None = None,
         extra: dict | None = None,
         deletes_fingerprint: tuple[str, ...] | None = None,
         extra_validation=None,
         branch: str | None = None,
         validation_state=None,
     ) -> LogEntry:
-        files = self._write_files(df, input_bytes=input_bytes)
+        files = self._write_files(df, input_bytes=input_bytes, input_rows=input_rows)
 
         def make(version: int) -> LogEntry:
             # Iceberg-style commit validation: `removed` was planned
@@ -2808,7 +2734,11 @@ class LakehouseTable:
         return self.log.append(make, branch=branch)
 
     def _write_files(
-        self, df: DataFrame, input_bytes: int | None = None, shaped: bool = False
+        self,
+        df: DataFrame,
+        input_bytes: int | None = None,
+        input_rows: int | None = None,
+        shaped: bool = False,
     ) -> tuple[FileInfo, ...]:
         """Write df as parquet honoring `write.target-file-size-bytes`
         and `write.distribution-mode` (guide :108-109, :324-328).
@@ -2826,11 +2756,13 @@ class LakehouseTable:
         this (literal/unknown plans report 8 EiB). Compaction passes
         exact logged bytes and skips staging entirely.
 
-        A LocalRelation-backed frame first tries the driver-side
-        pyarrow path (`_write_files_local`), whether or not
-        `input_bytes` is given: `input_bytes` only sizes the Spark
-        writer, and the fast path declines by itself when a file would
-        exceed the target size.
+        Rows in hand first try the driver-side pyarrow path
+        (`_write_files_local`): a LocalRelation-backed frame, or any
+        frame whose `input_rows` — an upper bound on its row count, such
+        as the logged rows of the files a rewrite reads — is at most
+        `localrows.WRITE_MAX`, which is then collected once.
+        `input_bytes` only sizes the Spark writer; the fast path
+        declines by itself when a file would exceed the target size.
         """
         props = self.log.properties_at()
         target = int(props.get(PROP_TARGET_FILE_SIZE, DEFAULT_TARGET_FILE_SIZE))
@@ -2843,7 +2775,7 @@ class LakehouseTable:
             and not props.get(PROP_SORT_ORDER, "")
             and not props.get(PROP_PARTITION_SPEC)
         ):
-            fast = self._write_files_local(df, target)
+            fast = self._write_files_local(df, target, input_rows)
             if fast is not None:
                 return fast
 
@@ -2970,18 +2902,21 @@ class LakehouseTable:
         self.io.rmtree(staged_dir)
         return final
 
-    def _write_files_local(self, df: DataFrame, target: int):
-        """Fast path for LocalRelation-backed tiny commits: write the
-        driver-held rows as ONE pyarrow parquet file, skipping Spark's
-        ~200 ms per-write job-scheduling + committer-rename floor
-        (fastwrite.py has the fidelity contract). Returns None whenever
-        the write isn't eligible — scan-backed plan, unsupported type,
-        over the target file size, or a non-local warehouse path — and
-        the caller proceeds with the Spark writer. Empty LocalRelation
-        frames ARE claimed (r16): the output matches the Spark writer's
-        observable empty-frame behavior exactly — one empty
-        schema-bearing parquet file — so the files metadata view is
-        indistinguishable."""
+    def _write_files_local(
+        self, df: DataFrame, target: int, input_rows: int | None = None
+    ):
+        """Fast path for rows in hand: write them with pyarrow, skipping
+        Spark's ~200 ms per-write job-scheduling + committer-rename
+        floor (fastwrite.py has the fidelity contract). A LocalRelation
+        (or `repartition(n, cols)` over one) is collected without a
+        job; a frame with `input_rows <= localrows.WRITE_MAX` is
+        collected in one job. Returns None whenever the write isn't
+        eligible — neither of those, unsupported type, over the target
+        file size, or a non-local warehouse path — and the caller
+        proceeds with the Spark writer. Empty frames ARE claimed (r16):
+        the output matches the Spark writer's observable empty-frame
+        behavior exactly — one empty schema-bearing parquet file — so
+        the files metadata view is indistinguishable."""
         if not self._plain_local():
             return None
         part_cols: list[str] | None = None
@@ -2997,7 +2932,7 @@ class LakehouseTable:
                 # the multi-file write needs no job either. Only plain
                 # column keys are claimed; computed keys fall back.
                 child = plan.child()
-                if not _is_local_relation(child):
+                if not localrows.is_local_relation(child):
                     return None
                 if not plan.optNumPartitions().isDefined():
                     # repartition(cols) WITHOUT an explicit n: AQE may
@@ -3020,37 +2955,44 @@ class LakehouseTable:
                     self.spark._jsparkSession, child
                 )
                 df = DataFrame(jdf, self.spark)
-            elif not _is_local_relation(plan):
+            elif not localrows.is_local_relation(plan) and not (
+                input_rows is not None and input_rows <= localrows.WRITE_MAX
+            ):
                 return None
         except Exception:
             return None
-        rows = df.collect()  # LocalTableScanExec.executeCollect — no job
-        if len(rows) > fastwrite.MAX_ROWS:
-            return None
-        if not rows:
+        rows = df.collect()
+        if not rows or part_cols is None:
             # Spark's FileFormatWriter special-cases a fully empty frame:
             # ONE empty schema-bearing file, regardless of repartitioning
             # (verified against both the scan-empty and local-empty
             # shapes). Claim it: a delete_where that empties its affected
-            # files commits 0 survivor rows without a Spark job.
-            groups = [(0, rows)]
-        elif part_cols is None:
-            groups = [(0, rows)]
-        else:
-            pids = fastwrite.spark_partition_ids(rows, df.schema, part_cols, n_parts)
-            if pids is None:
-                return None
-            by_pid: dict[int, list] = {}
-            for r, pid in zip(rows, pids):
-                by_pid.setdefault(pid, []).append(r)
-            # file names carry the ACTUAL shuffle partition id, like the
-            # Spark writer's task numbering (empty partitions write no
-            # file, so indices may have gaps — exactly like Spark)
-            groups = [(p, by_pid[p]) for p in sorted(by_pid)]
+            # files commits 0 survivor rows without a Spark write.
+            return self._write_rows([(0, rows)], df.schema, target)
+        pids = fastwrite.spark_partition_ids(rows, df.schema, part_cols, n_parts)
+        if pids is None:
+            return None
+        by_pid: dict[int, list] = {}
+        for r, pid in zip(rows, pids):
+            by_pid.setdefault(pid, []).append(r)
+        # file names carry the ACTUAL shuffle partition id, like the
+        # Spark writer's task numbering (empty partitions write no
+        # file, so indices may have gaps — exactly like Spark)
+        return self._write_rows(
+            [(p, by_pid[p]) for p in sorted(by_pid)], df.schema, target
+        )
+
+    def _write_rows(
+        self, groups, schema: T.StructType, target: int | None = None
+    ) -> tuple[FileInfo, ...] | None:
+        """Write `(partition id, rows)` groups with pyarrow, one parquet
+        file per group in a fresh commit dir, and scan the result. None
+        (nothing written) when a group's types are outside fastwrite's
+        map or its Arrow size exceeds `target`."""
         tables = []
         for pid, g in groups:
-            tbl = fastwrite.rows_to_arrow(g, df.schema)
-            if tbl is None or tbl.nbytes > target:
+            tbl = fastwrite.rows_to_arrow(g, schema)
+            if tbl is None or (target is not None and tbl.nbytes > target):
                 return None
             tables.append((pid, tbl))
         out = os.path.join(self.data_dir, f"v{uuid.uuid4().hex[:12]}")

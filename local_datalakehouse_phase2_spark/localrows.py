@@ -1,30 +1,35 @@
-"""Single-partition, JVM-only DataFrames from small literal row lists.
+"""Rows in hand: the one module that decides whether rows are few
+enough to hold on the driver, with one cap per cost.
+
+- `VALUES_MAX` (500) bounds rows that re-enter Spark as SQL text:
+  `local_df` renders them as a ``VALUES`` SELECT and falls back to
+  `spark.createDataFrame` past it (the text would be megabytes), or
+  for types it does not render (structs).
+- `WRITE_MAX` (10,000) bounds rows a lakehouse commit collects to write
+  with pyarrow (`lakehouse/fastwrite.py`) instead of the Spark writer.
+  Every bounded probe (`collect_at_most`: `limit(cap + 1)`) uses it.
+
+A LocalRelation's rows are in hand already (`is_local_relation`,
+`held_rows`: collecting runs no job). Whether a warehouse takes
+driver-side writes depends on the table's IO, so that check stays in
+`lakehouse/table.py`.
 
 `spark.createDataFrame(rows, schema)` parallelizes pickled rows into
-``defaultParallelism`` Python-runner partitions — on local[32] that is
-32 Python workers plus a shuffle for a 20-row frame, measured ~280 ms
-to collect and ~500 ms to write. The engine builds hundreds of such
-frames: metadata views (snapshots/files/history), SQL result frames
-(SHOW/DESCRIBE/CALL), and the lifecycle queries' verification rows.
-
-`local_df` renders the same rows as a ``VALUES`` SELECT instead: the
-plan is a LocalRelation — pure JVM, single partition, no Python
-runner, no shuffle (~17 ms collect, ~180 ms write; see r12 notes).
-Exactness: every literal renders round-trippable (repr for floats,
-microsecond timestamps, hex for binary), and each column is CAST to
-its declared type, so results are value-identical to the
-createDataFrame spelling — the oracle hash gate re-proved that for
-every registry entry when this swapped in. Nullability is exact too:
-nullable fields come out nullable and declared non-null fields (every
-lakehouse metadata view's schema) stay non-null, so those frames stay
-on the VALUES path; only a None in a non-null field falls back, to the
-createDataFrame error it raises.
-
-At 100 TB this matters for none of the data path (real data never
-routes through literal rows) but keeps the *metadata* path — the thing
-a 1000-executor job hits once per commit — off the Python-runner slow
-path. Rows beyond `_MAX_ROWS` (SQL text would be megabytes) and types
-we don't render (structs) fall back to `spark.createDataFrame`.
+``defaultParallelism`` Python-runner partitions — on local[32], 32
+Python workers plus a shuffle for a 20-row frame (~280 ms to collect,
+~500 ms to write). `local_df`'s VALUES plan is a LocalRelation — pure
+JVM, single partition, no Python runner (~17 ms collect, ~180 ms
+write; see r12 notes) — for the metadata views, SQL result frames and
+lifecycle verification rows. Every literal renders round-trippable
+(repr for floats, microsecond timestamps, hex for binary) and each
+column is CAST to its declared type, so results are value-identical
+to createDataFrame; the oracle hash gate re-proved that for every
+registry entry. Nullability is exact too: declared non-null fields
+(every lakehouse metadata view's schema) stay non-null, and a None in
+one falls back to the createDataFrame error it raises. A naive
+timestamp renders in the session zone (UTC), so rows a `collect()`
+returned, whose naive timestamps are in the driver's zone, re-enter
+through `collected_df`.
 """
 
 from __future__ import annotations
@@ -36,7 +41,8 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-_MAX_ROWS = 500
+VALUES_MAX = 500  # rows rendered as SQL VALUES text
+WRITE_MAX = 10_000  # rows collected and written with pyarrow
 
 # (session id, schema simpleString) -> the empty-LocalRelation frame.
 # Empty frames are pure values (immutable plan, no data), so one parse
@@ -66,7 +72,10 @@ _PLACEHOLDER = {
     T.MapType: {},
 }
 
-__all__ = ["local_df"]
+__all__ = [
+    "VALUES_MAX", "WRITE_MAX", "collect_at_most", "collected_df", "held_rows",
+    "is_local_relation", "local_df",
+]
 
 
 def _schema_of(schema: T.StructType | str) -> T.StructType:
@@ -157,10 +166,10 @@ def local_df(
 
     `rows` are positional (tuple / list / Row). Intended for SMALL
     frames (metadata views, result rows, fixture feeds); row lists
-    longer than 500 fall back."""
+    longer than `VALUES_MAX` fall back."""
     sch = _schema_of(schema)
     rows = list(rows)
-    if len(rows) > _MAX_ROWS:
+    if len(rows) > VALUES_MAX:
         return spark.createDataFrame(rows, sch)
     types = [f.dataType for f in sch.fields]
     if not rows:
@@ -213,3 +222,46 @@ def local_df(
     if out.schema != sch:  # a None in a non-null field etc. — stay exact
         return spark.createDataFrame(rows, sch)
     return out
+
+
+def _driver_zone(v, dt: T.DataType):
+    """A collected value with the driver's zone attached to its naive
+    instants (astimezone()'s naive-input behavior, as in
+    `fastwrite._convert`)."""
+    if isinstance(dt, T.TimestampType) and v is not None and v.tzinfo is None:
+        return v.astimezone()
+    if isinstance(dt, T.ArrayType) and v is not None:
+        return [_driver_zone(e, dt.elementType) for e in v]
+    return v
+
+
+def collected_df(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """`local_df` of rows a `collect()` returned: PySpark hands back
+    TimestampType values as naive datetimes in the driver's zone, so
+    they get that zone to re-enter Spark as the same instants."""
+    sch = _schema_of(schema)
+    types = [f.dataType for f in sch.fields]
+    return local_df(spark, [tuple(map(_driver_zone, r, types)) for r in rows], sch)
+
+
+def is_local_relation(plan) -> bool:
+    """True for a LocalRelation logical plan: rows the driver already
+    holds, so collecting them runs no Spark job."""
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def held_rows(df: DataFrame) -> list | None:
+    """`df`'s rows when its optimized plan is a LocalRelation (every
+    `local_df` product), collected without a job; else None."""
+    if not is_local_relation(df._jdf.queryExecution().optimizedPlan()):
+        return None
+    return df.collect()
+
+
+def collect_at_most(df: DataFrame, cap: int) -> list | None:
+    """`df`'s rows when it has at most `cap` of them, else None, from
+    one bounded scan. What an op matches, not what it reads, decides;
+    a match over `cap` costs this probe on top of the distributed
+    path."""
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None

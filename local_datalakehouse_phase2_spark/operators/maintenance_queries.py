@@ -35,6 +35,7 @@ from ..lakehouse import (
 )
 from ..registry import register
 from ..sources.loaders import load_table
+from .. import localrows
 from ..localrows import local_df
 
 
@@ -132,22 +133,20 @@ class _CountLedger:
         ]
 
 
-_LOCALIZE_CAP = 500  # localrows falls back past this; keep the scan then
-
-
 def _localize(df: DataFrame) -> DataFrame:
     """Collect a SMALL fixture frame once and rebuild it as a pure-JVM
-    LocalRelation (localrows.local_df). Filters/projections over the
+    LocalRelation (localrows.collected_df). Filters/projections over the
     result stay LocalRelations (Catalyst's ConvertToLocalRelation), so
     every tiny lifecycle append sliced from it takes the driver-side
     parquet fast path (table._write_files_local) — no Spark job per
     commit — instead of re-scanning the fixture parquet per slice.
     Values are identical by construction (same rows, localrows renders
-    round-trippable literals); frames past the cap stay as-is."""
-    rows = df.limit(_LOCALIZE_CAP + 1).collect()
-    if len(rows) > _LOCALIZE_CAP:
+    round-trippable literals); frames past localrows' VALUES cap stay
+    as-is."""
+    rows = localrows.collect_at_most(df, localrows.VALUES_MAX)
+    if rows is None:
         return df
-    return local_df(df.sparkSession, rows, df.schema)
+    return localrows.collected_df(df.sparkSession, rows, df.schema)
 
 
 def _with_lake(spark: SparkSession, fn) -> DataFrame:

@@ -6,6 +6,8 @@ values, so any rendering drift is a correctness bug, not a perf one."""
 
 import datetime as dt
 import math
+import os
+import time
 
 import pytest
 from pyspark.sql import types as T
@@ -157,3 +159,64 @@ def test_metadata_views_run_zero_jobs(spark, tmp_path, spark_jobs):
         rows, jobs = spark_jobs(lambda: view().collect())
         assert len(rows) == n_rows
         assert jobs == 0, f"{view.__name__}() ran {jobs} Spark job(s)"
+
+
+@pytest.fixture
+def driver_tz():
+    """`switch(name)` moves the driver's Python time zone off UTC (the
+    JVM and the session zone stay UTC); both the TZ variable and the
+    zone are restored after the test."""
+    old = os.environ.get("TZ")
+
+    def switch(name: str) -> None:
+        os.environ["TZ"] = name
+        time.tzset()
+
+    yield switch
+    if old is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def test_collected_timestamps_keep_their_instant_on_a_non_utc_driver(
+    spark, tmp_path, driver_tz
+):
+    """`collect()` hands back TimestampType values as naive datetimes
+    in the driver's zone. Rows that re-enter Spark after a collect — a
+    copy-on-write DELETE's survivors, a merge-on-read UPDATE's updated
+    rows, `CALL ancestors_of`'s history rows — must keep their instants
+    when that zone is not the session's UTC."""
+    from local_datalakehouse_phase2_spark.lakehouse import Lakehouse, LakehouseSQL
+
+    lake = Lakehouse(spark, str(tmp_path / "w"))
+    lake.create_namespace("lab")
+    ddl = "k bigint, ts timestamp"
+    noon = dt.datetime(2026, 1, 15, 12, tzinfo=dt.timezone.utc)
+    rows = [(k, noon) for k in range(4)]
+    cow = lake.create_table("lab.cow", schema=ddl)
+    cow.append(local_df(spark, rows, ddl))
+    mor = lake.create_table(
+        "lab.mor", schema=ddl, properties={"write.update.mode": "merge-on-read"}
+    )
+    mor.append(local_df(spark, rows, ddl))
+
+    driver_tz("America/New_York")
+    cow.delete_where("k = 0")
+    mor.update_where({"k": "k + 10"}, "k = 0")
+    ancestors = LakehouseSQL(lake).sql(
+        "CALL nessie.system.ancestors_of(table => 'lab.cow')"
+    )
+
+    def instants(df, key, col):
+        return sorted(
+            tuple(r) for r in df.selectExpr(key, f"unix_micros({col})").collect()
+        )
+
+    at_noon = int(noon.timestamp()) * 1_000_000
+    assert instants(cow.read(), "k", "ts") == [(k, at_noon) for k in (1, 2, 3)]
+    assert instants(mor.read(), "k", "ts") == [(k, at_noon) for k in (1, 2, 3, 10)]
+    assert instants(ancestors, "snapshot_id", "made_current_at") == instants(
+        cow.history(), "snapshot_id", "made_current_at"
+    )

@@ -1,5 +1,6 @@
 """Row-level commits choose their driver-side path from what they
-touch, not from the table's size. On a table above fastwrite's row cap:
+touch, not from the table's size. On a table above `localrows.WRITE_MAX`
+rows:
 
 - a merge-on-read DELETE of a few rows runs ONE Spark job, the bounded
   scan of the matched rows;
@@ -7,17 +8,23 @@ touch, not from the table's size. On a table above fastwrite's row cap:
   cardinality rule and counts its source without a job;
 - a match over the cap still takes the distributed tombstone writer
   and commits the same table values as the driver path.
+
+A copy-on-write rewrite of files that log at most `WRITE_MAX` rows is
+collected once and written with pyarrow, and commits the same table
+values as the Spark writer.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from local_datalakehouse_phase2_spark.lakehouse import Lakehouse, fastwrite
+from local_datalakehouse_phase2_spark import localrows
+from local_datalakehouse_phase2_spark.lakehouse import Lakehouse
 from local_datalakehouse_phase2_spark.lakehouse import table as table_mod
 from local_datalakehouse_phase2_spark.localrows import local_df
 
-ROWS = fastwrite.MAX_ROWS + 2_000  # live rows, above the old table-size gate
+ROWS = localrows.WRITE_MAX + 2_000  # live rows, above the probe's cap
+COW_ROWS = 2_000  # above the VALUES cap, within the pyarrow write cap
 DDL = "k bigint, v string"
 MOR = {
     "write.delete.mode": "merge-on-read",
@@ -33,12 +40,12 @@ def lake(spark, tmp_path):
     return lake
 
 
-def _table(spark, lake, name: str, properties: dict | None = None):
+def _table(spark, lake, name: str, properties: dict | None = None, rows: int = ROWS):
     t = lake.create_table(f"lab.{name}", schema=DDL, properties=properties)
     # one data file: its scan is one partition, so the bounded matched
     # scan is one job
     t.append(
-        spark.range(ROWS)
+        spark.range(rows)
         .selectExpr("id AS k", "CAST(id % 7 AS STRING) AS v")
         .coalesce(1)
     )
@@ -49,11 +56,20 @@ def _values(t) -> list[tuple]:
     return sorted(tuple(r) for r in t.read().collect())
 
 
-def _merge_source(spark):
+def _merge_source(spark, rows: int = ROWS):
     # 10 keys that hit the table, 10 that insert
     return local_df(
-        spark, [(k, f"m{k}") for k in range(ROWS - 10, ROWS + 10)], DDL
+        spark, [(k, f"m{k}") for k in range(rows - 10, rows + 10)], DDL
     )
+
+
+def _run(spark, t, op: str, rows: int = ROWS) -> None:
+    if op == "delete":
+        t.delete_where("k BETWEEN 100 AND 109")
+    elif op == "update":
+        t.update_where({"v": "concat(v, '!')"}, "k BETWEEN 100 AND 109")
+    else:
+        t.merge(_merge_source(spark, rows), ["k"])
 
 
 def test_mor_delete_of_few_rows_runs_one_job(spark, lake, spark_jobs):
@@ -65,7 +81,7 @@ def test_mor_delete_of_few_rows_runs_one_job(spark, lake, spark_jobs):
     assert t.read().count() == ROWS - 10
 
 
-def test_merge_from_driver_rows_checks_and_counts_without_jobs(
+def test_merge_from_held_rows_checks_and_counts_without_jobs(
     spark, lake, spark_jobs
 ):
     t = _table(spark, lake, "merge")
@@ -89,33 +105,43 @@ def test_merge_from_driver_rows_checks_and_counts_without_jobs(
 def test_large_match_takes_distributed_path_with_same_result(
     spark, lake, monkeypatch, op
 ):
-    """With the caps lowered under the match size, the merge-on-read op
-    runs `_write_pos_deletes` (the distributed tombstone writer) and
-    must commit exactly the table the driver path commits."""
+    """With the cap lowered under the match size, the merge-on-read op
+    gives `_write_pos_deletes` no rows in hand, so it runs the
+    distributed tombstone writer, and must commit exactly the table the
+    driver path commits."""
     calls = []
     real = table_mod.LakehouseTable._write_pos_deletes
 
-    def spy(self, matches):
-        calls.append(self.identifier)
-        return real(self, matches)
+    def spy(self, matches, rows=None):
+        calls.append((self.identifier, rows is None))
+        return real(self, matches, rows)
 
     monkeypatch.setattr(table_mod.LakehouseTable, "_write_pos_deletes", spy)
 
-    def run(t):
-        if op == "delete":
-            t.delete_where("k BETWEEN 100 AND 109")
-        elif op == "update":
-            t.update_where({"v": "concat(v, '!')"}, "k BETWEEN 100 AND 109")
-        else:
-            t.merge(_merge_source(spark), ["k"])
-
     local = _table(spark, lake, f"{op}_local", MOR)
-    run(local)
-    assert calls == []
+    _run(spark, local, op)
+    assert calls == [(local.identifier, False)]
     distributed = _table(spark, lake, f"{op}_dist", MOR)
     with monkeypatch.context() as m:
-        m.setattr(fastwrite, "MAX_ROWS", 5)
-        m.setattr(table_mod, "_LOCAL_VALUES_MAX", 5)
-        run(distributed)
-    assert calls == [distributed.identifier]
+        m.setattr(localrows, "WRITE_MAX", 5)
+        _run(spark, distributed, op)
+    assert calls[1:] == [(distributed.identifier, True)]
     assert _values(distributed) == _values(local)
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_cow_rewrite_within_write_cap_skips_spark_writer(
+    spark, lake, monkeypatch, spark_jobs, op
+):
+    """A copy-on-write op on a one-file table of `COW_ROWS` rows, more
+    than SQL VALUES text carries, collects the rewrite once and writes
+    it with pyarrow: fewer jobs than the Spark writer it takes with
+    `WRITE_MAX` lowered under the file's rows, and the same table."""
+    driver = _table(spark, lake, f"{op}_cow_driver", rows=COW_ROWS)
+    _, driver_jobs = spark_jobs(lambda: _run(spark, driver, op, COW_ROWS))
+    spark_writer = _table(spark, lake, f"{op}_cow_spark", rows=COW_ROWS)
+    with monkeypatch.context() as m:
+        m.setattr(localrows, "WRITE_MAX", 5)
+        _, writer_jobs = spark_jobs(lambda: _run(spark, spark_writer, op, COW_ROWS))
+    assert driver_jobs < writer_jobs, (driver_jobs, writer_jobs)
+    assert _values(driver) == _values(spark_writer)
